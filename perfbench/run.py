@@ -36,8 +36,9 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, "work")
 TARGET = os.path.join(HERE, "target")
 HEAP = "2g"
-# fixed, pre-touched heap: GC sizing and resident memory do not drift per run
-JVM_OPTS = [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch"]
+# fixed, pre-touched heap: GC sizing and resident memory do not drift per run;
+# no perf-data file outside the checkout
+JVM_OPTS = [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch", "-XX:-UsePerfData"]
 MEMORY_FRACTION = {"rsna_etl": "0.05", "corpus_dedup_search": "0.6"}
 JVM_TIMEOUT_S = 170
 ADD_OPENS = [
@@ -82,7 +83,7 @@ def build():
                 with open(cp_file) as g:
                     return g.read().strip()
     env = dict(os.environ, COURSIER_MODE="offline")
-    opts = ["-Dsbt.offline=true", "-Xmx2g"]
+    opts = ["-Dsbt.offline=true", "-Xmx2g", "-XX:-UsePerfData"]
     repos = os.path.expanduser("~/.sbt/repositories")
     if os.path.isfile(repos):
         opts += ["-Dsbt.override.build.repos=true", f"-Dsbt.repository.config={repos}"]
@@ -126,7 +127,8 @@ def run_jvm(classpath, args, data_dir, t0):
               "--memory-fraction", MEMORY_FRACTION[args.workload],
               "--golden", os.path.join(HERE, "golden", "query_fingerprints.json"),
               "--t0-ms", str(int(t0 * 1000))])
-    env = dict(os.environ, LC_ALL="C.utf8")
+    env = dict(os.environ, LC_ALL="C.utf8",
+               SPARK_LOCAL_DIRS=os.path.join(data_dir, "spark-local"))
     with open(log_path, "w") as log:
         proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=log, text=True, env=env,
                                 start_new_session=True)
