@@ -297,29 +297,47 @@ object Dedup {
     */
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
-      k: Int = 64, bands: Int = 16, threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val rowsPerBand = k / bands
+      threshold: Double = 0.8, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // NOT cached: the signature kernel is cheap enough that recomputing per
     // consumer beats paying columnar cache materialization of the arrays
     // (measured 3-4x at sf0.1). The kernel IS k min-scans per row though,
     // so fan an under-split scan first (guide §2.5; no-op at scale).
-    val sigs = withMinhash(
-        graft.Tables.fanOut(df.select(col(idCol), col(textCol)),
-          col(idCol)), textCol, k)
-      .filter(size(col("shingle_hashes")) > 0) // jaccard undefined on empty sets
-      .select(col(idCol), col("sig"))
-    val bandsDf = capBuckets(lshBands(sigs, idCol, bands, rowsPerBand), maxBucket)
+    val bandsDf = minhashBands(
+      graft.Tables.fanOut(df.select(col(idCol), col(textCol)), col(idCol)),
+      idCol, textCol)
+    verifyWithStringJaccard(cappedBandSelfJoin(bandsDf, idCol, maxBucket),
+        df, idCol, textCol, threshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
 
-    val cand = bandsDf.as("a")
-      .join(bandsDf.as("b"),
+  /** Signature length and band count of every MinHash near-dup entry
+    * point: 16 bands of 4 rows, whose S-curve midpoint (1/16)^(1/4) = 0.5
+    * sits below both verify thresholds in use (0.7 and 0.8). */
+  private val SigLen = 64
+  private val Bands = 16
+
+  /** The MinHash candidate stage's band table: one (id, band, bucket) row
+    * per band of every doc with a non-empty shingle set (jaccard is
+    * undefined on empty sets). */
+  private[ops] def minhashBands(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    lshBands(
+      withMinhash(df, textCol, SigLen)
+        .filter(size(col("shingle_hashes")) > 0)
+        .select(col(idCol), col("sig")),
+      idCol, Bands, SigLen / Bands)
+
+  /** Candidate pairs (doc_a < doc_b) of a band table: docs sharing a
+    * bucket in some band, after [[capBuckets]] drops the oversized ones. */
+  private[ops] def cappedBandSelfJoin(bandsDf: DataFrame, idCol: String,
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    val b = capBuckets(bandsDf, maxBucket)
+    b.as("a")
+      .join(b.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"))
       .distinct()
-
-    verifyWithStringJaccard(cand, df, idCol, textCol, threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /** Incremental near-dup: pairs between an INCOMING batch and an existing
@@ -333,15 +351,9 @@ object Dedup {
     */
   def minhashNearDupsAgainst(
       batch: DataFrame, index: DataFrame, idCol: String, textCol: String,
-      k: Int = 64, bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    val rowsPerBand = k / bands
-    def bandsOf(df: DataFrame) = lshBands(
-      withMinhash(df, textCol, k)
-        .filter(size(col("shingle_hashes")) > 0)
-        .select(col(idCol), col("sig")),
-      idCol, bands, rowsPerBand)
-    val cand = bandsOf(batch).as("a")
-      .join(bandsOf(index).as("b"),
+      threshold: Double = 0.8): DataFrame = {
+    val cand = minhashBands(batch, idCol, textCol).as("a")
+      .join(minhashBands(index, idCol, textCol).as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
       .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"))
       .distinct()
@@ -366,14 +378,8 @@ object Dedup {
     * [[minhashNearDupsAgainst]], plus the batch-internal pairs). */
   def minhashNearDupsWithBase(extra: DataFrame, base: DataFrame,
       baseBands: DataFrame, basePairs: DataFrame, idCol: String,
-      textCol: String, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    val rowsPerBand = k / bands
-    val extraBands = lshBands(
-      withMinhash(extra, textCol, k)
-        .filter(size(col("shingle_hashes")) > 0)
-        .select(col(idCol), col("sig")),
-      idCol, bands, rowsPerBand)
+      textCol: String, threshold: Double = 0.8): DataFrame = {
+    val extraBands = minhashBands(extra, idCol, textCol)
     val allBands = baseBands.select(col(idCol), col("band"), col("bucket"))
       .unionByName(extraBands)
     val cand = extraBands.as("a")
@@ -849,9 +855,8 @@ object Dedup {
     * already-verified bucketed primitive. Returns every corpus doc:
     * (doc_id, cluster_size, weight rounded 4). */
   def softDedupWeights(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 64, bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    val clusters = dupClusters(
-        minhashNearDups(df, idCol, textCol, k, bands, threshold))
+      threshold: Double = 0.8): DataFrame = {
+    val clusters = dupClusters(minhashNearDups(df, idCol, textCol, threshold))
       .select(col("doc_id").as(idCol), col("cluster_size"))
     df.select(col(idCol)).join(clusters, Seq(idCol), "left")
       .select(col(idCol),

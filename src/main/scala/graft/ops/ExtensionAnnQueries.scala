@@ -190,9 +190,7 @@ object ExtensionAnnQueries {
       "x30_pq_codes",
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
-        val codebook = Similarity
-          .seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         Similarity.pqEncode(e, "vec_id", "embedding", m = 8, codebook)
           .orderBy("vec_id")
       },
@@ -271,9 +269,7 @@ object ExtensionAnnQueries {
       "x42_pq_adc_topk",
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
-        val codebook = Similarity
-          .seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         Similarity.pqAdcTopK(e.filter(col("vec_id") < 5), e,
             "vec_id", "embedding", m = 8, k = 10, codebook)
           .orderBy("qid", "rn")
@@ -445,9 +441,7 @@ object ExtensionAnnQueries {
       "x57_ivfpq_topk",
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
-        val codebook = Similarity
-          .seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         Similarity.ivfPqTopK(e.filter(col("vec_id") < 5), e,
             "vec_id", "embedding", k = 10, nProbe = 3,
             seedIds = (0L to 7L), m = 8, codebook)
@@ -493,9 +487,7 @@ object ExtensionAnnQueries {
         val q = e.filter(col("vec_id") < 5)
         val exact = Similarity.cosineTopK(q, e, "vec_id", "embedding", k = 10)
           .select(col("qid"), col("cid"))
-        val codebook = Similarity
-          .seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         val approx = Similarity.ivfPqTopK(q, e, "vec_id", "embedding",
             k = 10, nProbe = 3, seedIds = (0L to 7L), m = 8, codebook)
           .select(col("qid"), col("cid")).withColumn("hit", lit(1L))
@@ -561,9 +553,7 @@ object ExtensionAnnQueries {
       "x68_ivfpq_refined",
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
-        val codebook = Similarity
-          .seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         Similarity.ivfPqRefineTopK(e.filter(col("vec_id") < 5), e,
             "vec_id", "embedding", k = 10, nProbe = 4,
             seedIds = (0L to 7L), m = 8, codebook, refine = 100)
@@ -615,9 +605,7 @@ object ExtensionAnnQueries {
         val q = e.filter(col("vec_id") < 5)
         val exact = Similarity.cosineTopK(q, e, "vec_id", "embedding", k = 10)
           .select(col("qid"), col("cid"))
-        val codebook = Similarity
-          .seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         val approx = Similarity.ivfPqRefineTopK(q, e, "vec_id", "embedding",
             k = 10, nProbe = 4, seedIds = (0L to 7L), m = 8, codebook,
             refine = 100)
@@ -690,9 +678,7 @@ object ExtensionAnnQueries {
       "x70_ivfpq_index_roundtrip",
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
-        val codebook = Similarity
-          .seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         val idxDir = java.nio.file.Files
           .createTempDirectory("graft_ivfpq_index").toString
         deleteOnExit(idxDir)
@@ -749,8 +735,7 @@ object ExtensionAnnQueries {
       "x76_ivf_cell_health",
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
-        val cents = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 7L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val cents = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 7L))
         val assigned = e
           .select(Similarity.cellAssignUdf(cents)(col("embedding")).as("ca"))
           .select(col("ca.cell").as("cell"), col("ca.micros").as("micros"))
@@ -810,8 +795,7 @@ object ExtensionAnnQueries {
         deleteOnExit(root)
         val mid = e.agg(max(col("vec_id"))).head.getLong(0) / 2
         val first = e.filter(col("vec_id") <= mid)
-        val cbA = Similarity.seedVectors(first, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val cbA = Similarity.seedCentroids(first, "vec_id", "embedding", (0L to 15L))
         IvfPqIndex.publish(
           IvfPqIndex.build(first, "vec_id", "embedding",
             seedIds = (0L to 1L), m = 8, cbA), root, v = 1)
@@ -885,8 +869,7 @@ object ExtensionAnnQueries {
         val q = e.filter(col("vec_id") < 5)
         val exact = Similarity.cosineTopK(q, e, "vec_id", "embedding", k = 10)
           .select(col("qid"), col("cid"))
-        val cb = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-          .map(_.map(_.toDouble).toArray).toArray
+        val cb = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
         val perm = Similarity.varianceSnakePerm(e, "embedding", dim = 64, m = 8)
         val cbRot = cb.map(cent => Array.tabulate(64)(j => cent(perm(j))))
         val plainShort = Similarity.pqAdcTopK(q, e, "vec_id", "embedding",
@@ -1240,9 +1223,7 @@ object ExtensionAnnQueries {
         } {
           lowSqrtN(de)
         } {
-          Similarity
-            .seedVectors(embFull, "vec_id", "embedding", (0L to 15L))
-            .map(_.map(_.toDouble).toArray).toArray
+          Similarity.seedCentroids(embFull, "vec_id", "embedding", (0L to 15L))
         }
         Similarity.bitextMarginPairsAnn(en, de, "doc_id", "embedding",
             k = 4, nProbe = 3, srcSeeds = srcSeeds, tgtSeeds = tgtSeeds,

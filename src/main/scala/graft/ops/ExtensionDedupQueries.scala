@@ -484,7 +484,7 @@ object ExtensionDedupQueries {
         Dedup.minhashNearDupsAgainst(
             docs.filter(col("doc_id") % 5 === 0),
             docs.filter(col("doc_id") % 5 =!= 0),
-            "doc_id", "text", k = 64, bands = 16, threshold = 0.8)
+            "doc_id", "text", threshold = 0.8)
           .orderBy("doc_a", "doc_b")
       },
       Some("""WITH t AS (
@@ -696,7 +696,7 @@ object ExtensionDedupQueries {
       "x71_soft_dedup_weights",
       (s, dir) =>
         Dedup.softDedupWeights(Tables.documents(s, dir), "doc_id", "text",
-            k = 64, bands = 16, threshold = 0.8)
+            threshold = 0.8)
           .orderBy("doc_id"),
       Some(dupGraphCtes +
         """
@@ -982,7 +982,7 @@ object ExtensionDedupQueries {
         // device — exact-equivalent to minhashNearDups(base ∪ twins))
         val found = Dedup.minhashNearDupsWithBase(twins, base,
           SharedStages.docBands(s, dir), SharedStages.docNearDupPairs(s, dir),
-          "doc_id", "text", k = 64, bands = 16, threshold = 0.8)
+          "doc_id", "text", threshold = 0.8)
         val planted = base.filter(col("doc_id") % 10 === 0)
           .crossJoin(broadcast(off))
           .select(col("doc_id").as("doc_a"),
@@ -1350,7 +1350,7 @@ object ExtensionDedupQueries {
         // determinism (Dedup.minhashNearDupsWithBase scaladoc)
         val pairs = Dedup.minhashNearDupsWithBase(twins, base,
           SharedStages.docBands(s, dir), SharedStages.docNearDupPairs(s, dir),
-          "doc_id", "text", k = 64, bands = 16, threshold = 0.8)
+          "doc_id", "text", threshold = 0.8)
         val cl = Dedup.dupClustersStar(pairs)
           .select(col("doc_id"), col("cluster_id"))
         val asg = corpus.join(broadcast(off))

@@ -103,8 +103,7 @@ object IvfPqIndex {
     * from the given codebook. Call [[IvfPqIndex.save]] to persist. */
   def build(corpus: DataFrame, idCol: String, embCol: String,
       seedIds: Seq[Long], m: Int, codebook: Array[Array[Double]]): IvfPqIndex = {
-    val cents = Similarity.seedVectors(corpus, idCol, embCol, seedIds)
-      .map(_.map(_.toDouble).toArray).toArray
+    val cents = Similarity.seedCentroids(corpus, idCol, embCol, seedIds)
     IvfPqIndex(
       Similarity.ivfPqEncodeCells(corpus, idCol, embCol, cents, m, codebook),
       cents, codebook, m)
@@ -118,17 +117,14 @@ object IvfPqIndex {
     def vecs(path: String, ord: String): Array[Array[Double]] =
       spark.read.parquet(path).select(col(ord), col("vec")).orderBy(ord)
         .collect().map(_.getSeq[Double](1).toArray)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fCents = pool.submit(new java.util.concurrent.Callable[Array[Array[Double]]] {
-        def call() = vecs(s"$dir/centroids", "cell")
-      })
-      val fM = pool.submit(new java.util.concurrent.Callable[Int] {
-        def call() = spark.read.parquet(s"$dir/meta").head.getInt(0)
-      })
-      val cb = vecs(s"$dir/codebook", "c")
-      IvfPqIndex(spark.read.parquet(s"$dir/codes"), fCents.get(), cb, fM.get())
-    } finally pool.shutdown()
+    val (cents, m, cb) = graft.Par.par3 {
+      vecs(s"$dir/centroids", "cell")
+    } {
+      spark.read.parquet(s"$dir/meta").head.getInt(0)
+    } {
+      vecs(s"$dir/codebook", "c")
+    }
+    IvfPqIndex(spark.read.parquet(s"$dir/codes"), cents, cb, m)
   }
 
   // ---- versioned lifecycle: build → serve/ingest → health → re-train ----
@@ -209,8 +205,7 @@ object IvfPqIndex {
     val worst = cur.occupancy().agg(max(col("share"))).head.getDouble(0)
     if (worst <= maxShare) None
     else {
-      val cb = Similarity.seedVectors(corpus, idCol, embCol, codebookSeedIds)
-        .map(_.map(_.toDouble).toArray).toArray
+      val cb = Similarity.seedCentroids(corpus, idCol, embCol, codebookSeedIds)
       val v = currentVersion(root).getOrElse(0) + 1
       publish(build(corpus, idCol, embCol, seedIds, m, cb), root, v)
       Some(v)

@@ -85,12 +85,8 @@ object SharedStages {
       // fan the under-split scan before the shingle+64-min signature
       // kernel — the build's dominant per-row cost (guide §2.5; no-op on
       // a well-split table)
-      Dedup.lshBands(
-        Dedup.withMinhash(Tables.fanOut(Tables.documents(s, dir)
-            .select(col("doc_id"), col("text")), col("doc_id")), "text", 64)
-          .filter(size(col("shingle_hashes")) > 0)
-          .select(col("doc_id"), col("sig")),
-        "doc_id", bands = 16, rowsPerBand = 4)
+      Dedup.minhashBands(Tables.fanOut(Tables.documents(s, dir)
+          .select(col("doc_id"), col("text")), col("doc_id")), "doc_id", "text")
     }
 
   /** Verified near-dup pairs (word-shingle jaccard >= 0.8) over the raw
@@ -101,18 +97,10 @@ object SharedStages {
     materialized(s, s"docNearDupPairs|$dir") {
       // same bucket-occupancy skew guard as Dedup.minhashNearDups: a
       // boilerplate hot bucket would make this self-join's pair mass
-      // quadratic in the bucket size (see Dedup.DefaultMaxBucket); the
-      // cap's count-window rides the (band, bucket) shuffle the join
-      // needs anyway. No-op on every oracle-checked corpus (largest
-      // sf0.01 bucket is family-sized, decades under the cap).
-      val b = Dedup.capBuckets(docBands(s, dir))
-      val cand = b.as("a")
-        .join(b.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
+      // quadratic in the bucket size (see Dedup.DefaultMaxBucket). No-op
+      // on every oracle-checked corpus (largest sf0.01 bucket is
+      // family-sized, decades under the cap).
+      val cand = Dedup.cappedBandSelfJoin(docBands(s, dir), "doc_id")
       Dedup.verifyWithStringJaccard(cand,
           Tables.documents(s, dir), "doc_id", "text", 0.8)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -168,15 +156,12 @@ object SharedStages {
     * oracles hash-check it. */
   def cleanDeduped(s: SparkSession, dir: String): DataFrame =
     materialized(s, s"cleanDeduped|$dir") {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      try {
-        val fut = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame =
-            materialized(s, s"cleanBase|$dir")(afterExactBuild(s, dir))
-        })
+      val (base, _) = graft.Par.par2 {
+        materialized(s, s"cleanBase|$dir")(afterExactBuild(s, dir))
+      } {
         docNearDupPairs(s, dir) // force bands + pairs memos on this thread
-        dropNearDups(s, dir, fut.get())
-      } finally pool.shutdown()
+      }
+      dropNearDups(s, dir, base)
     }
 
   /** Bench hook: drop every memo entry so the next consumer (or the

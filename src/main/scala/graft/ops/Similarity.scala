@@ -1,7 +1,7 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`).
@@ -43,20 +43,39 @@ object Similarity {
     * vectors (excluding itself), ranked by rounded cosine desc then id. */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("q_emb"))
-      .withColumn("q_nrm", sqrt(expr("float_dot(q_emb, q_emb)")))
-    val c = corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"))
-      .withColumn("c_nrm", sqrt(expr("float_dot(c_emb, c_emb)")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    q.crossJoin(c)
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(expr("float_dot(q_emb, c_emb)") / (col("q_nrm") * col("c_nrm")), 4)
-          .as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val q = withNorm(queries.select(col(idCol).as("qid"), col(embCol).as("q_emb")),
+      "q_emb", "q_nrm")
+    val c = withNorm(corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb")),
+      "c_emb", "c_nrm")
+    topKByCosine(q.crossJoin(c).filter(col("qid") =!= col("cid")), k)
   }
+
+  /** `df` plus `nrm`, the L2 norm of its float-array column `emb` —
+    * computed once per row so a pair sweep never recomputes it. Registers
+    * `float_dot` on the frame's session. */
+  private def withNorm(df: DataFrame, emb: String, nrm: String): DataFrame = {
+    graft.plans.GraftFunctions.register(df.sparkSession)
+    df.withColumn(nrm, sqrt(expr(s"float_dot($emb, $emb)")))
+  }
+
+  /** Cosine of embedding columns `a` and `b` over their [[withNorm]]
+    * norms, rounded to 4 decimals for cross-engine determinism. */
+  private def cosineScore(a: String, b: String, aNrm: String, bNrm: String): Column =
+    round(expr(s"float_dot($a, $b)") / (col(aNrm) * col(bNrm)), 4)
+
+  /** The per-query top-k cut shared by every ranked output here: k rows
+    * per `qid`, ordered by `score` then `cid`. Plans as Partial+Final
+    * WindowGroupLimit, so each partition keeps a bounded k-heap before the
+    * single shuffle. */
+  private def topKPerQuery(df: DataFrame, k: Int, score: Column): DataFrame =
+    Relational.topKPerGroup(df, k, Seq(col("qid")), Seq(score, col("cid")))
+
+  /** Rank (qid, q_emb, q_nrm) × (cid, c_emb, c_nrm) pairs by rounded
+    * cosine: (qid, cid, sim, rn), sim desc. */
+  private def topKByCosine(pairs: DataFrame, k: Int): DataFrame =
+    topKPerQuery(pairs.select(col("qid"), col("cid"),
+        cosineScore("q_emb", "c_emb", "q_nrm", "c_nrm").as("sim")),
+      k, col("sim").desc)
 
   /** Deterministic random hyperplanes: nBits × dim doubles in [-1, 1],
     * generated from a fixed seed and inlined as literal arrays. */
@@ -88,6 +107,13 @@ object Similarity {
     seedIds.map(id => byId.getOrElse(id,
       throw new IllegalArgumentException(s"seed id $id not in corpus")))
   }
+
+  /** [[seedVectors]] in double precision — the centroid table (IVF coarse
+    * cells) or codebook (PQ) the kernels below score against, index-aligned
+    * with `seedIds`. */
+  def seedCentroids(corpus: DataFrame, idCol: String, embCol: String,
+      seedIds: Seq[Long]): Array[Array[Double]] =
+    seedVectors(corpus, idCol, embCol, seedIds).map(_.map(_.toDouble).toArray).toArray
 
   /** Variance-balanced subspace permutation — the cheap, permutation-only
     * member of the OPQ family (eigenvalue-allocation flavor; Ge et al.,
@@ -144,21 +170,11 @@ object Similarity {
     * bucket; one equi-join shuffle on the bucket key. */
   private def bucketedTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int, bucketOf: Column => Column): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("q_emb"),
-      bucketOf(col(embCol)).as("bucket"))
-      .withColumn("q_nrm", sqrt(expr("float_dot(q_emb, q_emb)")))
-    val c = corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"),
-      bucketOf(col(embCol)).as("bucket"))
-      .withColumn("c_nrm", sqrt(expr("float_dot(c_emb, c_emb)")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    q.join(c, "bucket")
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(expr("float_dot(q_emb, c_emb)") / (col("q_nrm") * col("c_nrm")), 4)
-          .as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val q = withNorm(queries.select(col(idCol).as("qid"), col(embCol).as("q_emb"),
+      bucketOf(col(embCol)).as("bucket")), "q_emb", "q_nrm")
+    val c = withNorm(corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"),
+      bucketOf(col(embCol)).as("bucket")), "c_emb", "c_nrm")
+    topKByCosine(q.join(c, "bucket").filter(col("qid") =!= col("cid")), k)
   }
 
   /** LSH-bucketed approximate top-k: queries only score vectors in their own
@@ -182,16 +198,13 @@ object Similarity {
     * only same-bucket pairs are scored. */
   private def bucketedNearDups(df: DataFrame, idCol: String, embCol: String,
       threshold: Double, bucketOf: Column => Column): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val e = df.select(col(idCol), col(embCol),
-      bucketOf(col(embCol)).as("bucket"))
-      .withColumn("__nrm", sqrt(expr(s"float_dot($embCol, $embCol)")))
+    val e = withNorm(df.select(col(idCol), col(embCol),
+      bucketOf(col(embCol)).as("bucket")), embCol, "__nrm")
     e.as("a").join(e.as("b"),
         col("a.bucket") === col("b.bucket") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(
         col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        round(expr(s"float_dot(a.$embCol, b.$embCol)") /
-          (col("a.__nrm") * col("b.__nrm")), 4).as("sim"))
+        cosineScore(s"a.$embCol", s"b.$embCol", "a.__nrm", "b.__nrm").as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -240,7 +253,7 @@ object Similarity {
     (0 until iters).foreach { _ =>
       val bc = spark.sparkContext.broadcast(centroids)
       val assigned = vecs.map { case (_, v) =>
-        (nearestCentroid(v, bc.value), v.map(_.toDouble).toArray)
+        (nearestCell(v, bc.value)._1, v.map(_.toDouble).toArray)
       }.toDF("cluster", "vec")
       val updated = assigned
         .groupBy(col("cluster"))
@@ -256,23 +269,49 @@ object Similarity {
     centroids
   }
 
-  private def nearestCentroid(v: Seq[Float], cents: Array[Array[Double]]): Int = {
-    // materialize once: generic Seq element access inside the k x dim loop
-    // costs boxing + megamorphic dispatch (see Quantized.FlatCentroids)
+  /** Squared L2 distance between `a` and `cent` over dims [from, until) —
+    * the one distance loop behind every centroid scan and PQ subspace
+    * lookup here. `a` is the vector materialized once: generic Seq element
+    * access inside the centroid × dim loop costs boxing + megamorphic
+    * dispatch (see Quantized.FlatCentroids). */
+  private def sqL2(a: Array[Float], cent: Array[Double], from: Int, until: Int): Double = {
+    require(a.length == cent.length, s"vector has ${a.length} dimensions, " +
+      s"expected ${cent.length} (the centroid/codebook dimension)")
+    var d = 0.0; var i = from
+    while (i < until) { val diff = a(i) - cent(i); d += diff * diff; i += 1 }
+    d
+  }
+
+  /** Squared L2 distance from `v` to every centroid, index-aligned. */
+  private def centroidDists(v: Seq[Float], cents: Array[Array[Double]]): Array[Double] = {
     val a = v.toArray
+    cents.map(sqL2(a, _, 0, a.length))
+  }
+
+  /** Nearest centroid of `v` and its squared distance; ties go to the
+    * lower cell. */
+  private def nearestCell(v: Seq[Float], cents: Array[Array[Double]]): (Int, Double) = {
+    val ds = centroidDists(v, cents)
     var best = 0; var bestD = Double.MaxValue
     var c = 0
-    while (c < cents.length) {
-      var d = 0.0; var i = 0
-      val cent = cents(c)
-      while (i < cent.length && i < a.length) {
-        val diff = a(i) - cent(i); d += diff * diff; i += 1
-      }
-      if (d < bestD) { bestD = d; best = c }
+    while (c < ds.length) {
+      if (ds(c) < bestD) { bestD = ds(c); best = c }
       c += 1
     }
-    best
+    (best, bestD)
   }
+
+  /** Row-local cell assignment over broadcast centroids. */
+  private def cellUdf(bc: Broadcast[Array[Array[Double]]]) =
+    udf { v: Seq[Float] => nearestCell(v, bc.value)._1 }
+
+  /** The `nProbe` nearest cells of a query, nearest first, ties to the
+    * lower cell. */
+  private def probeUdf(bc: Broadcast[Array[Array[Double]]], nProbe: Int) =
+    udf { v: Seq[Float] =>
+      centroidDists(v, bc.value).zipWithIndex.sortBy(x => (x._1, x._2))
+        .take(nProbe).map(_._2)
+    }
 
   /** Cell assignment with its squared distance in integer micro-units —
     * [[cellAssignUdf]]'s row type. Micros, not a rounded double: summing
@@ -282,22 +321,10 @@ object Similarity {
 
   /** Nearest-centroid id AND distance in one pass (the index-health lens:
     * per-cell occupancy and distortion are the re-train signals for a
-    * frozen coarse quantizer). Same flat-array kernel as
-    * [[nearestCentroid]]. */
+    * frozen coarse quantizer). Same kernel as [[cellUdf]]. */
   def cellAssignUdf(cents: Array[Array[Double]]) = udf { v: Seq[Float] =>
-    val a = v.toArray
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < cents.length) {
-      var d = 0.0; var i = 0
-      val cent = cents(c)
-      while (i < cent.length && i < a.length) {
-        val diff = a(i) - cent(i); d += diff * diff; i += 1
-      }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    CellAssign(best, math.floor(bestD * 1e6 + 0.5).toLong)
+    val (cell, d) = nearestCell(v, cents)
+    CellAssign(cell, math.floor(d * 1e6 + 0.5).toLong)
   }
 
   /** Per-vector int8 quantization summary from [[int8QuantUdf]]. */
@@ -347,22 +374,17 @@ object Similarity {
   def pqEncode(df: DataFrame, idCol: String, embCol: String, m: Int,
       codebook: Array[Array[Double]], keep: Seq[String] = Nil): DataFrame = {
     val bc = df.sparkSession.sparkContext.broadcast(codebook)
-    val mm = m
     val kernel = udf { v: Seq[Float] =>
-      val cb = bc.value
-      val dim = v.length
-      val dsub = dim / mm
+      val nCent = bc.value.length
+      val ds = pqSubspaceDists(v, bc.value, m)
       val sb = new StringBuilder
       var sse = 0.0
       var s = 0
-      while (s < mm) {
+      while (s < m) {
         var best = 0; var bestD = Double.MaxValue
         var c = 0
-        while (c < cb.length) {
-          val cent = cb(c)
-          var d = 0.0; var i = s * dsub
-          val end = i + dsub
-          while (i < end) { val diff = v(i) - cent(i); d += diff * diff; i += 1 }
+        while (c < nCent) {
+          val d = ds(s * nCent + c)
           if (d < bestD) { bestD = d; best = c }
           c += 1
         }
@@ -371,7 +393,7 @@ object Similarity {
         sb.append(best)
         s += 1
       }
-      PqStats(sb.toString, sse / dim * 1e6)
+      PqStats(sb.toString, sse / v.length * 1e6)
     }
     df.select(col(idCol) +: keep.map(col) :+ kernel(col(embCol)).as("pq"): _*)
       .select(col(idCol) +: keep.map(col) :+ col("pq.codes").as("codes")
@@ -382,26 +404,30 @@ object Similarity {
     * (s, c) = ||q[s·dsub,(s+1)·dsub) − cent_c[same)||², rounded to 6
     * decimals so downstream ADC sums are exact integer-micro sums on both
     * the engine and the oracle (the x40/x44 DECIMAL(18,6) device). */
-  private def pqLutUdf(m: Int, bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]) =
+  private def pqLutUdf(m: Int, bc: Broadcast[Array[Array[Double]]]) =
     udf { v: Seq[Float] =>
-      val cb = bc.value
-      val dsub = v.length / m
-      val out = new Array[Double](m * cb.length)
+      pqSubspaceDists(v, bc.value, m).map(d => math.floor(d * 1e6 + 0.5) / 1e6)
+    }
+
+  /** Squared L2 distance from each of `v`'s `m` contiguous subvectors to
+    * the same slice of every codebook centroid — the shared kernel of
+    * [[pqEncode]] and the ADC lookup table; entry (s, c) at s·|cb| + c. */
+  private def pqSubspaceDists(v: Seq[Float], cb: Array[Array[Double]],
+      m: Int): Array[Double] = {
+    val a = v.toArray
+    val dsub = a.length / m
+    val out = new Array[Double](m * cb.length)
+    var c = 0
+    while (c < cb.length) {
       var s = 0
       while (s < m) {
-        var c = 0
-        while (c < cb.length) {
-          val cent = cb(c)
-          var d = 0.0; var i = s * dsub
-          val end = i + dsub
-          while (i < end) { val diff = v(i) - cent(i); d += diff * diff; i += 1 }
-          out(s * cb.length + c) = math.floor(d * 1e6 + 0.5) / 1e6
-          c += 1
-        }
+        out(s * cb.length + c) = sqL2(a, cb(c), s * dsub, (s + 1) * dsub)
         s += 1
       }
-      out
+      c += 1
     }
+    out
+  }
 
   /** ADC distance = Σ_s lut(s, code_s): summed in integer micro-units
     * (LUT entries are exact multiples of 1e-6), order-independent and
@@ -450,13 +476,11 @@ object Similarity {
     val coded = pqEncode(corpus, idCol, embCol, m, codebook)
       .select(col(idCol).as("cid"), col("codes"))
     val q = queries.select(col(idCol).as("qid"), lutUdf(col(embCol)).as("lut"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("cid"))
-    coded.crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(adcUdf(col("lut"), col("codes")), 4).as("adc"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    topKPerQuery(coded.crossJoin(broadcast(q))
+        .filter(col("qid") =!= col("cid"))
+        .select(col("qid"), col("cid"),
+          round(adcUdf(col("lut"), col("codes")), 4).as("adc")),
+      k, col("adc"))
   }
 
   /** IVF-PQ top-k (the FAISS IVFPQ layout; Jégou et al. 2011 §V, public):
@@ -472,8 +496,7 @@ object Similarity {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int, nProbe: Int, seedIds: Seq[Long],
       m: Int, codebook: Array[Array[Double]]): DataFrame = {
-    val cents = seedVectors(corpus, idCol, embCol, seedIds)
-      .map(_.map(_.toDouble).toArray).toArray
+    val cents = seedCentroids(corpus, idCol, embCol, seedIds)
     val coded = ivfPqEncodeCells(corpus, idCol, embCol, cents, m, codebook)
     ivfPqSearchCoded(queries, idCol, embCol, coded, cents, m, codebook,
       k, nProbe)
@@ -486,8 +509,7 @@ object Similarity {
       embCol: String, centroids: Array[Array[Double]], m: Int,
       codebook: Array[Array[Double]]): DataFrame = {
     val bcC = corpus.sparkSession.sparkContext.broadcast(centroids)
-    val assignUdf = udf { v: Seq[Float] => nearestCentroid(v, bcC.value) }
-    pqEncode(corpus.withColumn("cell", assignUdf(col(embCol))),
+    pqEncode(corpus.withColumn("cell", cellUdf(bcC)(col(embCol))),
         idCol, embCol, m, codebook, keep = Seq("cell"))
       .select(col(idCol).as("cid"), col("cell"), col("codes"))
   }
@@ -501,28 +523,16 @@ object Similarity {
     val spark = coded.sparkSession
     val bcC = spark.sparkContext.broadcast(centroids)
     val bcCb = spark.sparkContext.broadcast(codebook)
-    val probeUdf = udf { v: Seq[Float] =>
-      val ds = bcC.value.zipWithIndex.map { case (cent, ci) =>
-        var d = 0.0; var i = 0
-        while (i < cent.length && i < v.length) {
-          val diff = v(i) - cent(i); d += diff * diff; i += 1
-        }
-        (d, ci)
-      }
-      ds.sortBy(x => (x._1, x._2)).take(nProbe).map(_._2)
-    }
     val lutUdf = pqLutUdf(m, bcCb)
     val adcUdf = pqAdcUdf(codebook.length)
     val q = queries.select(col(idCol).as("qid"),
         lutUdf(col(embCol)).as("lut"),
-        explode(probeUdf(col(embCol))).as("cell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("cid"))
-    coded.join(q, "cell")
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(adcUdf(col("lut"), col("codes")), 4).as("adc"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+        explode(probeUdf(bcC, nProbe)(col(embCol))).as("cell"))
+    topKPerQuery(coded.join(q, "cell")
+        .filter(col("qid") =!= col("cid"))
+        .select(col("qid"), col("cid"),
+          round(adcUdf(col("lut"), col("codes")), 4).as("adc")),
+      k, col("adc"))
   }
 
   /** IVF-PQ with an exact re-rank tail (the FAISS `IndexRefineFlat`
@@ -557,18 +567,11 @@ object Similarity {
     * matches [[cosineTopK]]. */
   private[ops] def cosineRerank(shortlist: DataFrame, queries: DataFrame,
       corpus: DataFrame, idCol: String, embCol: String, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val c = corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"))
-      .withColumn("c_nrm", sqrt(expr("float_dot(c_emb, c_emb)")))
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("q_emb"))
-      .withColumn("q_nrm", sqrt(expr("float_dot(q_emb, q_emb)")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    broadcast(shortlist).join(c, "cid").join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        round(expr("float_dot(q_emb, c_emb)") / (col("q_nrm") * col("c_nrm")), 4)
-          .as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val c = withNorm(corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb")),
+      "c_emb", "c_nrm")
+    val q = withNorm(queries.select(col(idCol).as("qid"), col(embCol).as("q_emb")),
+      "q_emb", "q_nrm")
+    topKByCosine(broadcast(shortlist).join(c, "cid").join(broadcast(q), "qid"), k)
   }
 
   /** IVF core given a fixed centroid table: cell assignment is a row-local
@@ -578,36 +581,12 @@ object Similarity {
   private def ivfTopKWithCentroids(queries: DataFrame, corpus: DataFrame,
       idCol: String, embCol: String, k: Int, nProbe: Int,
       centroids: Array[Array[Double]]): DataFrame = {
-    val spark = corpus.sparkSession
-    val bc = spark.sparkContext.broadcast(centroids)
-
-    val assignUdf = udf { v: Seq[Float] => nearestCentroid(v, bc.value) }
-    val probeUdf = udf { v: Seq[Float] =>
-      val ds = bc.value.zipWithIndex.map { case (cent, ci) =>
-        var d = 0.0; var i = 0
-        while (i < cent.length && i < v.length) {
-          val diff = v(i) - cent(i); d += diff * diff; i += 1
-        }
-        (d, ci)
-      }
-      ds.sortBy(x => (x._1, x._2)).take(nProbe).map(_._2)
-    }
-
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val c = corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"),
-      assignUdf(col(embCol)).as("cell"))
-      .withColumn("c_nrm", sqrt(expr("float_dot(c_emb, c_emb)")))
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("q_emb"),
-      explode(probeUdf(col(embCol))).as("cell"))
-      .withColumn("q_nrm", sqrt(expr("float_dot(q_emb, q_emb)")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    q.join(c, "cell")
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(expr("float_dot(q_emb, c_emb)") / (col("q_nrm") * col("c_nrm")), 4)
-          .as("sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val bc = corpus.sparkSession.sparkContext.broadcast(centroids)
+    val c = withNorm(corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"),
+      cellUdf(bc)(col(embCol)).as("cell")), "c_emb", "c_nrm")
+    val q = withNorm(queries.select(col(idCol).as("qid"), col(embCol).as("q_emb"),
+      explode(probeUdf(bc, nProbe)(col(embCol))).as("cell")), "q_emb", "q_nrm")
+    topKByCosine(q.join(c, "cell").filter(col("qid") =!= col("cid")), k)
   }
 
   /** IVF approximate top-k with a Lloyd k-means coarse quantizer. */
@@ -625,8 +604,7 @@ object Similarity {
   def ivfTopKSeeded(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, k: Int, nProbe: Int, seedIds: Seq[Long]): DataFrame =
     ivfTopKWithCentroids(queries, corpus, idCol, embCol, k, nProbe,
-      seedVectors(corpus, idCol, embCol, seedIds)
-        .map(_.map(_.toDouble).toArray).toArray)
+      seedCentroids(corpus, idCol, embCol, seedIds))
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540, public): duplicates
     * that string-level dedup cannot see — same meaning, different words —
@@ -649,18 +627,13 @@ object Similarity {
     * witness id or NULL, keep ∈ {0,1}). */
   def semDedup(corpus: DataFrame, idCol: String, embCol: String,
       tau: Double, seedIds: Seq[Long]): DataFrame = {
-    val centroids = seedVectors(corpus, idCol, embCol, seedIds)
-      .map(_.map(_.toDouble).toArray).toArray
-    val bc = corpus.sparkSession.sparkContext.broadcast(centroids)
-    val assignUdf = udf { v: Seq[Float] => nearestCentroid(v, bc.value) }
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val e = corpus.select(col(idCol), col(embCol),
-      assignUdf(col(embCol)).cast("long").as("cell"))
-      .withColumn("__nrm", sqrt(expr(s"float_dot($embCol, $embCol)")))
+    val bc = corpus.sparkSession.sparkContext.broadcast(
+      seedCentroids(corpus, idCol, embCol, seedIds))
+    val e = withNorm(corpus.select(col(idCol), col(embCol),
+      cellUdf(bc)(col(embCol)).cast("long").as("cell")), embCol, "__nrm")
     val dropped = e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") && col(s"b.$idCol") < col(s"a.$idCol"))
-      .filter(round(expr(s"float_dot(a.$embCol, b.$embCol)") /
-        (col("a.__nrm") * col("b.__nrm")), 4) >= tau)
+      .filter(cosineScore(s"a.$embCol", s"b.$embCol", "a.__nrm", "b.__nrm") >= tau)
       .groupBy(col(s"a.$idCol").as(idCol))
       .agg(min(col(s"b.$idCol")).as("dup_of"))
     e.select(col(idCol), col("cell"))
@@ -684,24 +657,17 @@ object Similarity {
     * same ranking — the output contract is unchanged. */
   def hardNegatives(anchors: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, labelCol: String, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val a = anchors.select(col(idCol).as("qid"), col(embCol).as("q_emb"),
-        col(labelCol).as("q_label"))
-      .withColumn("q_nrm", sqrt(expr("float_dot(q_emb, q_emb)")))
-    val c = corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"),
-        col(labelCol).as("c_label"))
-      .withColumn("c_nrm", sqrt(expr("float_dot(c_emb, c_emb)")))
+    val a = withNorm(anchors.select(col(idCol).as("qid"), col(embCol).as("q_emb"),
+      col(labelCol).as("q_label")), "q_emb", "q_nrm")
+    val c = withNorm(corpus.select(col(idCol).as("cid"), col(embCol).as("c_emb"),
+      col(labelCol).as("c_label")), "c_emb", "c_nrm")
     val scored = broadcast(a).crossJoin(c)
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), col("q_label"), col("c_label"),
-        round(expr("float_dot(q_emb, c_emb)") / (col("q_nrm") * col("c_nrm")), 4)
-          .as("sim"))
+        cosineScore("q_emb", "c_emb", "q_nrm", "c_nrm").as("sim"))
     val pos = scored.filter(col("q_label") === col("c_label"))
       .groupBy("qid").agg(max(col("sim")).as("pos_sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored.filter(col("q_label") =!= col("c_label"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    topKPerQuery(scored.filter(col("q_label") =!= col("c_label")), k, col("sim").desc)
       .join(broadcast(pos), Seq("qid"), "left_outer")
       .select(col("qid"), col("rn"), col("cid"), col("sim").as("neg_sim"),
         col("pos_sim"),
@@ -779,34 +745,45 @@ object Similarity {
     * per-source-row / per-target-row, never global. */
   def bitextMarginPairs(src: DataFrame, tgt: DataFrame, idCol: String,
       embCol: String, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(src.sparkSession)
-    val x = src.select(col(idCol).as("src_id"), col(embCol).as("x_emb"))
-      .withColumn("x_nrm", sqrt(expr("float_dot(x_emb, x_emb)")))
-    val y = tgt.select(col(idCol).as("tgt_id"), col(embCol).as("y_emb"))
-      .withColumn("y_nrm", sqrt(expr("float_dot(y_emb, y_emb)")))
-    val pairs = x.crossJoin(y)
-      .select(col("src_id"), col("tgt_id"),
-        round(expr("float_dot(x_emb, y_emb)") / (col("x_nrm") * col("y_nrm")), 4)
-          .as("sim"))
+    val pairs = bitextSims(
+        bitextSrc(src, idCol, embCol).crossJoin(bitextTgt(tgt, idCol, embCol)))
       .localCheckpoint() // three consumers below; compute the O(|X||Y|) scan once
-    val wx = Window.partitionBy(col("src_id")).orderBy(col("sim").desc, col("tgt_id"))
-    val knnX = pairs.withColumn("rn", row_number().over(wx))
-      .filter(col("rn") <= k).groupBy("src_id")
+    val knnX = Relational.topKPerGroup(pairs, k, Seq(col("src_id")),
+        Seq(col("sim").desc, col("tgt_id")))
+      .groupBy("src_id")
       .agg(sum(col("sim").cast("decimal(18,6)")).cast("double").as("sx"))
-    val wy = Window.partitionBy(col("tgt_id")).orderBy(col("sim").desc, col("src_id"))
-    val knnY = pairs.withColumn("rn", row_number().over(wy))
-      .filter(col("rn") <= k).groupBy("tgt_id")
+    val knnY = Relational.topKPerGroup(pairs, k, Seq(col("tgt_id")),
+        Seq(col("sim").desc, col("src_id")))
+      .groupBy("tgt_id")
       .agg(sum(col("sim").cast("decimal(18,6)")).cast("double").as("sy"))
-    val kD = k.toDouble
-    val wBest = Window.partitionBy(col("src_id"))
-      .orderBy(col("margin").desc, col("tgt_id"))
-    pairs.join(knnX, "src_id").join(knnY, "tgt_id")
-      .select(col("src_id"), col("tgt_id"), col("sim"),
-        round(col("sim") /
-          ((col("sx") + col("sy")) / lit(2.0 * kD)), 4).as("margin"))
-      .withColumn("rn", row_number().over(wBest).cast("long"))
-      .filter(col("rn") === 1).drop("rn")
+    bestByMargin(pairs, knnX, knnY, k)
   }
+
+  /** The two sides of a bitext pair table: (src_id, x_emb, x_nrm) and
+    * (tgt_id, y_emb, y_nrm). */
+  private def bitextSrc(src: DataFrame, idCol: String, embCol: String): DataFrame =
+    withNorm(src.select(col(idCol).as("src_id"), col(embCol).as("x_emb")),
+      "x_emb", "x_nrm")
+  private def bitextTgt(tgt: DataFrame, idCol: String, embCol: String): DataFrame =
+    withNorm(tgt.select(col(idCol).as("tgt_id"), col(embCol).as("y_emb")),
+      "y_emb", "y_nrm")
+
+  /** (src_id, tgt_id, sim) over joined [[bitextSrc]] × [[bitextTgt]] rows. */
+  private def bitextSims(pairs: DataFrame): DataFrame =
+    pairs.select(col("src_id"), col("tgt_id"),
+      cosineScore("x_emb", "y_emb", "x_nrm", "y_nrm").as("sim"))
+
+  /** Each source row's best target by margin sim / ((sx + sy) / 2k) — the
+    * ranking both bitext forms share, given each side's k-NN sim sums. */
+  private def bestByMargin(sims: DataFrame, sx: DataFrame, sy: DataFrame,
+      k: Int): DataFrame =
+    Relational.topKPerGroup(
+        sims.join(sx, "src_id").join(sy, "tgt_id")
+          .select(col("src_id"), col("tgt_id"), col("sim"),
+            round(col("sim") /
+              ((col("sx") + col("sy")) / lit(2.0 * k.toDouble)), 4).as("margin")),
+        1, Seq(col("src_id")), Seq(col("margin").desc, col("tgt_id")))
+      .drop("rn")
 
   /** [[bitextMarginPairs]] with the 100 TB candidate path: each side's
     * k-NN list comes from [[ivfPqTopK]] (probed-cell equi-join candidates,
@@ -830,7 +807,6 @@ object Similarity {
       embCol: String, k: Int, nProbe: Int, srcSeeds: Seq[Long],
       tgtSeeds: Seq[Long], m: Int,
       codebook: Array[Array[Double]]): DataFrame = {
-    graft.plans.GraftFunctions.register(src.sparkSession)
     val fw = ivfPqTopK(src, tgt, idCol, embCol, k, nProbe, tgtSeeds, m,
         codebook)
       .select(col("qid").as("src_id"), col("cid").as("tgt_id"))
@@ -839,28 +815,14 @@ object Similarity {
       .select(col("cid").as("src_id"), col("qid").as("tgt_id"))
     val cand = fw.union(bw).distinct()
 
-    val x = src.select(col(idCol).as("src_id"), col(embCol).as("x_emb"))
-      .withColumn("x_nrm", sqrt(expr("float_dot(x_emb, x_emb)")))
-    val y = tgt.select(col(idCol).as("tgt_id"), col(embCol).as("y_emb"))
-      .withColumn("y_nrm", sqrt(expr("float_dot(y_emb, y_emb)")))
-    val sims = cand.join(x, "src_id").join(y, "tgt_id")
-      .select(col("src_id"), col("tgt_id"),
-        round(expr("float_dot(x_emb, y_emb)") / (col("x_nrm") * col("y_nrm")), 4)
-          .as("sim"))
+    val sims = bitextSims(cand.join(bitextSrc(src, idCol, embCol), "src_id")
+        .join(bitextTgt(tgt, idCol, embCol), "tgt_id"))
       .localCheckpoint() // consumed three times below; bounded (|X|+|Y|)·k rows
 
     val sx = fw.join(sims, Seq("src_id", "tgt_id")).groupBy("src_id")
       .agg(sum(col("sim").cast("decimal(18,6)")).cast("double").as("sx"))
     val sy = bw.join(sims, Seq("src_id", "tgt_id")).groupBy("tgt_id")
       .agg(sum(col("sim").cast("decimal(18,6)")).cast("double").as("sy"))
-    val kD = k.toDouble
-    val wBest = Window.partitionBy(col("src_id"))
-      .orderBy(col("margin").desc, col("tgt_id"))
-    sims.join(sx, "src_id").join(sy, "tgt_id")
-      .select(col("src_id"), col("tgt_id"), col("sim"),
-        round(col("sim") /
-          ((col("sx") + col("sy")) / lit(2.0 * kD)), 4).as("margin"))
-      .withColumn("rn", row_number().over(wBest).cast("long"))
-      .filter(col("rn") === 1).drop("rn")
+    bestByMargin(sims, sx, sy, k)
   }
 }

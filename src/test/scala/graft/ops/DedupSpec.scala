@@ -23,8 +23,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH finds exact and near dups, not unrelated docs") {
-    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
-        k = 64, bands = 16, threshold = 0.7)
+    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.7)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 3L))) // jaccard 1.0 — must be caught
     assert(pairs.contains((1L, 2L)) && pairs.contains((2L, 3L))) // near-dups
@@ -192,7 +191,7 @@ class DedupSpec extends SparkSpec {
       (103L, "an entirely separate sentence about glaciers and moraine")
     ).toDF("doc_id", "text")
     val pairs = Dedup.minhashNearDupsAgainst(batch, index, "doc_id", "text",
-        k = 64, bands = 16, threshold = 0.7)
+        threshold = 0.7)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     // every pair is (batch id, index id) — the doc_a contract
     assert(pairs.nonEmpty)
@@ -253,8 +252,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash estimate tracks exact jaccard on harness near-dups") {
     val real = graft.Tables.documents(spark, sfDir)
-    val found = Dedup.minhashNearDups(real, "doc_id", "text",
-        k = 64, bands = 16, threshold = 0.8)
+    val found = Dedup.minhashNearDups(real, "doc_id", "text", threshold = 0.8)
       .select("jaccard").as[Double].collect()
     assert(found.forall(_ >= 0.8))
   }
@@ -435,8 +433,7 @@ class DedupSpec extends SparkSpec {
       (id + 1000L, text + " zz9 zz8 zz7")
     }
     val corpus = (base ++ twins).toDF("doc_id", "text")
-    val found = Dedup.minhashNearDups(corpus, "doc_id", "text",
-        k = 64, bands = 16, threshold = 0.8)
+    val found = Dedup.minhashNearDups(corpus, "doc_id", "text", threshold = 0.8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val missing = base.map(_._1).filterNot(id => found.contains((id, id + 1000L)))
     assert(missing.isEmpty,
@@ -454,14 +451,13 @@ class DedupSpec extends SparkSpec {
       .select(($"doc_id" + off).as("doc_id"),
         concat($"text", lit(" zz9 zz8 zz7")).as("text"))
     val union = base.unionByName(extra)
-    val direct = Dedup.minhashNearDups(union, "doc_id", "text",
-        k = 64, bands = 16, threshold = 0.8)
+    val direct = Dedup.minhashNearDups(union, "doc_id", "text", threshold = 0.8)
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     val viaBase = Dedup.minhashNearDupsWithBase(extra, base,
         SharedStages.docBands(spark, sfDir),
         SharedStages.docNearDupPairs(spark, sfDir),
-        "doc_id", "text", k = 64, bands = 16, threshold = 0.8)
+        "doc_id", "text", threshold = 0.8)
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     assert(direct.nonEmpty, "fixture produced no pairs — vacuous")

@@ -41,8 +41,7 @@ class OpqSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val model = Opq.train(sample(), m = 8, k = 16, iters = 5)
 
-    val seedCb = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val seedCb = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val plainMse = Similarity.pqEncode(e, "vec_id", "embedding", m = 8, seedCb)
       .agg(avg(col("mse_e6"))).head.getDouble(0)
 
@@ -79,8 +78,7 @@ class OpqSpec extends SparkSpec {
       exact.intersect(approx).size.toDouble / exact.size
     }
 
-    val seedCb = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val seedCb = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val plainRecall = recallOf(
       Similarity.pqAdcTopK(q, e, "vec_id", "embedding", m = 8, k = 20, seedCb))
 

@@ -80,8 +80,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("pq codes: seed vectors code to themselves with zero distortion") {
     val e = graft.Tables.embeddings(spark, sfDir)
-    val codebook = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val out = Similarity.pqEncode(e, "vec_id", "embedding", m = 8, codebook)
       .as[(Long, String, Double)].collect()
       .map { case (k, v, m2) => k -> (v, m2) }.toMap
@@ -96,8 +95,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("pq ADC: distances match reconstructed-centroid sums, ranking ascends") {
     val e = graft.Tables.embeddings(spark, sfDir)
-    val codebook = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val q = e.filter($"vec_id" < 3)
     val out = Similarity.pqAdcTopK(q, e, "vec_id", "embedding",
         m = 8, k = 5, codebook)
@@ -131,8 +129,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivfPqTopK = pqAdcTopK restricted to probed cells") {
     val e = graft.Tables.embeddings(spark, sfDir)
-    val codebook = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val queries = e.filter(col("vec_id") < 3)
 
     val ivfpq = Similarity.ivfPqTopK(queries, e, "vec_id", "embedding",
@@ -165,8 +162,7 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.cosineTopK(q, e, "vec_id", "embedding", k = 10)
       .select("qid", "cid").as[(Long, Long)].collect().groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
-    val codebook = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val refined = Similarity.ivfPqRefineTopK(q, e, "vec_id", "embedding",
         k = 10, nProbe = 4, seedIds = (0L to 7L), m = 8, codebook, refine = 100)
       .select("qid", "cid").as[(Long, Long)].collect().groupBy(_._1)
@@ -183,8 +179,7 @@ class SimilaritySpec extends SparkSpec {
   test("IvfPqIndex: loaded index reproduces rebuilt results exactly") {
     val e = graft.Tables.embeddings(spark, sfDir)
     val q = e.filter($"vec_id" < 5)
-    val codebook = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
     val built = IvfPqIndex.build(e, "vec_id", "embedding",
       seedIds = (0L to 7L), m = 8, codebook)
@@ -209,6 +204,26 @@ class SimilaritySpec extends SparkSpec {
     assert(loaded.refineTopK(q, e, "vec_id", "embedding",
         k = 10, nProbe = 4, refine = 100)
       .orderBy("qid", "rn").collect().toSeq === freshRefined)
+  }
+
+  test("brute-force and index top-k cuts plan a per-partition k-heap (Partial WindowGroupLimit)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    val e = graft.Tables.embeddings(spark, sfDir)
+    val q = e.filter($"vec_id" < 5)
+    val idx = IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L)))
+    val plans = new AdaptiveSparkPlanHelper {}
+    Seq("cosineTopK" -> Similarity.cosineTopK(q, e, "vec_id", "embedding", k = 10),
+        "IvfPqIndex.topK" -> idx.topK(q, "vec_id", "embedding", k = 10, nProbe = 3))
+      .foreach { case (name, df) =>
+        assert(df.count() === 50L, name)
+        val modes = plans.collect(df.queryExecution.executedPlan) {
+          case w: WindowGroupLimitExec => w.mode.toString
+        }
+        assert(modes.exists(_.contains("Partial")),
+          s"$name has no Partial-mode WindowGroupLimit below its shuffle: $modes")
+      }
   }
 
   test("semDedup drops the higher id of in-cell near-dups, keeps the rest") {
@@ -354,9 +369,7 @@ class SimilaritySpec extends SparkSpec {
     val src = emb.filter(col("vec_id") < 6)
     val tgt = emb.filter(col("vec_id") >= 8 && col("vec_id") < 14)
     val k = 6
-    val codebook = Similarity
-      .seedVectors(emb, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val codebook = Similarity.seedCentroids(emb, "vec_id", "embedding", (0L to 15L))
     val brute = Similarity
       .bitextMarginPairs(src, tgt, "vec_id", "embedding", k)
       .collect()

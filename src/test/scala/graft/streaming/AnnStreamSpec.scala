@@ -9,8 +9,7 @@ class AnnStreamSpec extends SparkSpec {
 
   test("streamed index ingest == index built on the full corpus in one shot") {
     val e = graft.Tables.embeddings(spark, sfDir)
-    val codebook = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val base = e.filter($"vec_id" < 300)
     val rest = e.filter($"vec_id" >= 300)
       .select($"vec_id", $"embedding")
@@ -54,8 +53,7 @@ class AnnStreamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("ann_retrain").toString
     val mid = e.agg(org.apache.spark.sql.functions.max($"vec_id")).head.getLong(0) / 2
     val first = e.filter($"vec_id" <= mid)
-    val cbA = Similarity.seedVectors(first, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val cbA = Similarity.seedCentroids(first, "vec_id", "embedding", (0L to 15L))
     // v1: deliberately under-trained coarse quantizer (2 cells)
     IvfPqIndex.publish(IvfPqIndex.build(first, "vec_id", "embedding",
       seedIds = (0L to 1L), m = 8, cbA), root, v = 1)
@@ -82,8 +80,7 @@ class AnnStreamSpec extends SparkSpec {
     assert(IvfPqIndex.currentVersion(root) === Some(2))
 
     // post-retrain serve == fresh-build serve, code table and top-k both
-    val cbFull = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val cbFull = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     val fresh = IvfPqIndex.build(e, "vec_id", "embedding",
       seedIds = (0L to 7L), m = 8, cbFull)
     val swapped = IvfPqIndex.loadCurrent(spark, root)
@@ -96,11 +93,34 @@ class AnnStreamSpec extends SparkSpec {
         .orderBy("qid", "rn").collect().toSeq)
   }
 
+  test("a vector of the wrong dimension fails search and ingest with a clear message") {
+    val e = graft.Tables.embeddings(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("ann_dims").toString + "/idx"
+    IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))).save(dir)
+    val short = e.filter($"vec_id" < 5)
+      .select($"vec_id", org.apache.spark.sql.functions.slice($"embedding", 1, 32)
+        .as("embedding"))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val searchErr = intercept[Exception] {
+      IvfPqIndex.load(spark, dir).topK(short, "vec_id", "embedding", k = 10, nProbe = 3)
+        .collect()
+    }
+    assert(messages(searchErr).contains("vector has 32 dimensions, expected 64"))
+    val ingestErr = intercept[Exception] {
+      AnnStream.ingestBatch(short.withColumn("vec_id", $"vec_id" + 100000L),
+        "vec_id", "embedding", dir)
+    }
+    assert(messages(ingestErr).contains("vector has 32 dimensions, expected 64"))
+    assert(IvfPqIndex.load(spark, dir).codes.count() === e.count(),
+      "a failed ingest must not append codes")
+  }
+
   test("healthy occupancy does not retrain; pointer stays put") {
     val e = graft.Tables.embeddings(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("ann_noretrain").toString
-    val cb = Similarity.seedVectors(e, "vec_id", "embedding", (0L to 15L))
-      .map(_.map(_.toDouble).toArray).toArray
+    val cb = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
     IvfPqIndex.publish(IvfPqIndex.build(e, "vec_id", "embedding",
       seedIds = (0L to 7L), m = 8, cb), root, v = 1)
     val v = IvfPqIndex.retrainIfUnhealthy(spark, root, e, "vec_id", "embedding",
