@@ -1,8 +1,10 @@
 package graft
 
-import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
-import javax.imageio.ImageIO
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.US_ASCII
+import java.util.HexFormat
+import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -19,13 +21,20 @@ import graft.sources.{TFRecordIO, TFRecordSink}
   *
   * Stage 1 (generate_images_from_dicom.py:255-581): labels CSV → box/caption
   * maps → deterministic 80/20 split → 7 augmentation passes → annotation
-  * sinks. One shuffle total (the label groupBy); the label side broadcasts
-  * into the image join; augmentation is row-local flatMap.
+  * sinks. The label groupBy is the only shuffle before the sinks; the label
+  * side broadcasts into the image join; augmentation is row-local flatMap.
   *
   * Stage 2 (images_to_tfrecord.py:214-261): annotated images → per-box
   * validity filter + normalization → 16-feature tf.Example → sharded
-  * TFRecord sink. The reference's schema-mismatch bugs (SURVEY §3.2) are
-  * resolved by construction: one explicit ImageEx schema end-to-end.
+  * TFRecord sink (whose round-robin repartition is the second shuffle). The
+  * reference's schema-mismatch bugs (SURVEY §3.2) are resolved by
+  * construction: one explicit ImageEx schema end-to-end.
+  *
+  * [[runEndToEnd]] encodes each augmented frame exactly once: it caches the
+  * encoded examples (id, boxes, caption, record — a fraction of the raw
+  * frames' size), not the frames, and feeds every train sink from that
+  * cache. The train and validation sink chains share no data, so they run
+  * side by side ([[Par]]).
   */
 object Pipeline {
 
@@ -97,33 +106,71 @@ object Pipeline {
   /** Object/caption annotation maps as one-row-per-key DataFrames, written as
     * JSON (S5; reference emits a single JSON object — the exploded form is
     * the scalable equivalent and round-trips via S6). */
-  def annotationFrames(spark: SparkSession, ds: Dataset[ImageEx]): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val objects = ds.map(e => (e.id, e.boxes.map(b => Seq(b.x, b.y, b.w, b.h))))
-      .toDF("id", "boxes")
-    val captions = ds.map(e => (e.id, e.target)).toDF("id", "caption")
+  def annotationFrames(spark: SparkSession, ds: Dataset[_]): (DataFrame, DataFrame) = {
+    // column selects only: any Dataset with id/boxes/target columns (an
+    // ImageEx set or an encoded one) projects without touching its pixels
+    val objects = ds.select(col("id"),
+      transform(col("boxes"), b => array(b("x"), b("y"), b("w"), b("h"))).as("boxes"))
+    val captions = ds.select(col("id"), col("target").as("caption"))
     (objects, captions)
   }
 
-  // ImageIO defaults to a DISK-backed stream cache: every encode/decode
-  // writes a temp file. In-memory streams are strictly better for our
-  // byte-array round trips (thousands per task). JVM-wide, set once per
-  // executor when this object loads.
-  ImageIO.setUseCache(false)
+  private val PngSignature =
+    Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte)
 
-  /** Grayscale PNG encoding (S4) — real PNG via javax.imageio; 16-bit pixel
-    * values clip to 8-bit as the RSNA data is uint8 (SURVEY §1.1). */
+  /** Grayscale PNG encoding (S4): 16-bit pixel values clip to [0,255] as the
+    * RSNA data is uint8 (SURVEY §1.1). Written directly rather than through
+    * javax.imageio: an 8-bit grayscale IHDR, every scanline Sub-filtered
+    * (filter type 1), one IDAT deflated at BEST_SPEED, then IEND. Any PNG
+    * reader decodes it; ImageIO still does the decoding ([[ops.Multimodal]]). */
   def pngBytes(pixels: Array[Short], w: Int, h: Int): Array[Byte] = {
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var i = 0
-    while (i < pixels.length) {
-      raster.setSample(i % w, i / w, 0, math.min(255, math.max(0, pixels(i).toInt)))
-      i += 1
+    require(w > 0 && h > 0 && pixels.length == w.toLong * h,
+      s"${pixels.length} pixels do not fill a ${w}x$h image")
+    val stride = w + 1
+    val raw = new Array[Byte](stride * h)
+    var y = 0
+    while (y < h) {
+      val row = y * w
+      val out = y * stride
+      raw(out) = 1 // Sub: each byte minus its left neighbour, mod 256
+      var prev = 0
+      var x = 0
+      while (x < w) {
+        val v = math.min(255, math.max(0, pixels(row + x).toInt))
+        raw(out + 1 + x) = (v - prev).toByte
+        prev = v
+        x += 1
+      }
+      y += 1
     }
-    val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    val deflater = new Deflater(Deflater.BEST_SPEED)
+    val idat =
+      try {
+        deflater.setInput(raw)
+        deflater.finish()
+        val bos = new ByteArrayOutputStream(raw.length / 2 + 64)
+        val buf = new Array[Byte](1 << 16)
+        while (!deflater.finished()) bos.write(buf, 0, deflater.deflate(buf))
+        bos.toByteArray
+      } finally deflater.end()
+    val ihdr = ByteBuffer.allocate(13).putInt(w).putInt(h)
+      .put(8.toByte) // bit depth
+      .put(0.toByte) // colour type: grayscale
+      .put(0.toByte).put(0.toByte).put(0.toByte) // deflate, adaptive filtering, no interlace
+      .array()
+    val png = ByteBuffer.allocate(PngSignature.length + 3 * 12 + ihdr.length + idat.length)
+    png.put(PngSignature)
+    def chunk(kind: String, data: Array[Byte]): Unit = {
+      val tag = kind.getBytes(US_ASCII)
+      val crc = new CRC32
+      crc.update(tag)
+      crc.update(data)
+      png.putInt(data.length).put(tag).put(data).putInt(crc.getValue.toInt)
+    }
+    chunk("IHDR", ihdr)
+    chunk("IDAT", idat)
+    chunk("IEND", Array.emptyByteArray)
+    png.array()
   }
 
   /** Debug visualization (K6, generate_images_from_dicom.py:107-112 —
@@ -190,19 +237,27 @@ object Pipeline {
     }
   }
 
+  /** One encoded example: the annotation fields the JSON sinks need plus
+    * the serialized tf.Example — what [[runEndToEnd]] caches instead of
+    * the raw frame. */
+  final case class EncodedExample(id: String, boxes: Seq[Box], target: String,
+      record: Array[Byte])
+
   /** create_tf_example (§2.8): PNG-encode, sha256, per-box validity filter
-    * (P5, counted in `skipped`), normalize (P6), 16 features — with the
-    * true format 'png' (the reference hard-codes 'jpeg' for PNG bytes,
-    * images_to_tfrecord.py:151 — a bug we do not replicate). */
-  def assembleExamples(ds: Dataset[ImageEx], categoryIndex: Map[Int, String],
-      skipped: LongAccumulator): Dataset[Array[Byte]] = {
+    * (P5, counted in `skipped` — once per row computed, so cache a set that
+    * is read more than once), normalize (P6), 16 features — with the true
+    * format 'png' (the reference hard-codes 'jpeg' for PNG bytes,
+    * images_to_tfrecord.py:151 — a bug we do not replicate). Boxes and
+    * target ride along unfiltered for the annotation sinks. */
+  def encodeExamples(ds: Dataset[ImageEx], categoryIndex: Map[Int, String],
+      skipped: LongAccumulator): Dataset[EncodedExample] = {
     import ds.sparkSession.implicits._
     val catName = categoryIndex.getOrElse(1, "pneumonia")
     ds.map { ex =>
       val w = ex.width; val h = ex.height
       val png = pngBytes(ex.pixels, w, h)
-      val sha = java.security.MessageDigest.getInstance("SHA-256").digest(png)
-        .map("%02x".format(_)).mkString
+      val sha = HexFormat.of().formatHex(
+        java.security.MessageDigest.getInstance("SHA-256").digest(png))
       // P5 plus an x,y >= 0 guard: the reference's filter (:115-120) misses
       // negative origins (shift boxes are unclamped) and would emit
       // out-of-range normalized coords — invalid per its own schema (§1.5).
@@ -211,7 +266,7 @@ object Pipeline {
           b.x + b.w <= w && b.y + b.h <= h)
       if (bad.nonEmpty) skipped.add(bad.length)
       import TFRecordIO.Feature._
-      TFRecordIO.encodeExample(Map(
+      val record = TFRecordIO.encodeExample(Map(
         "image/height" -> int64(h),
         "image/width" -> int64(w),
         "image/filename" -> str(s"${ex.id}.png"),
@@ -228,8 +283,19 @@ object Pipeline {
         "image/object/class/label" -> int64s(valid.map(_ => 1L)),
         "image/object/is_crowd" -> int64s(valid.map(_ => 0L)),
         "image/object/area" -> floats(valid.map(b => (b.w * b.h).toFloat))))
+      EncodedExample(ex.id, ex.boxes, ex.target, record)
     }
   }
+
+  private def records(encoded: Dataset[EncodedExample]): Dataset[Array[Byte]] = {
+    import encoded.sparkSession.implicits._
+    encoded.select(col("record")).as[Array[Byte]]
+  }
+
+  /** The serialized tf.Examples of [[encodeExamples]]. */
+  def assembleExamples(ds: Dataset[ImageEx], categoryIndex: Map[Int, String],
+      skipped: LongAccumulator): Dataset[Array[Byte]] =
+    records(encodeExamples(ds, categoryIndex, skipped))
 
   /** Annotation-file scan (S6): the JSON maps written by stage 1, read back
     * and re-attached to images by id — stage 2 consumes the FILES, exactly
@@ -261,14 +327,19 @@ object Pipeline {
   }
 
   /** Full stage-1 + stage-2 run over an in-memory image set; returns
-    * (train shard count, val shard count, skipped annotations).
+    * (train example count, val example count, skipped annotations).
     *
     * `split` defaults to the scale-safe [[hashSplit8020]]; pass
     * [[split8020]] for the reference's exact-count id-order semantics.
     * Both stages' annotation JSONs are written for train AND validation
     * (reference generate_images_from_dicom.py:92-99,569-576), and the
     * validation TFRecords are built from the annotation FILES read back
-    * (images_to_tfrecord.py:280-285) — the sinks round-trip for real. */
+    * (images_to_tfrecord.py:280-285) — the sinks round-trip for real.
+    *
+    * The augmented train set is encoded once into a cached
+    * [[EncodedExample]] set (one count fills it); both train JSON sinks
+    * and the train shards read that cache. The train sinks and the
+    * validation chain then run side by side. */
   def runEndToEnd(spark: SparkSession, images: Dataset[(String, Array[Short], Int, Int)],
       labels: DataFrame, outDir: String,
       trainShards: Int = 256, valShards: Int = 32,
@@ -278,28 +349,30 @@ object Pipeline {
     val annotated = annotate(spark, images, maps).cache()
     val (train, valid) = split(annotated)
 
-    val augTrain = ops.Augment.allPasses(train).cache()
-    val (objects, captions) = annotationFrames(spark, augTrain)
-    objects.coalesce(1).write.mode("overwrite").json(s"$outDir/object_annotation")
-    captions.coalesce(1).write.mode("overwrite").json(s"$outDir/caption_annotation")
-
-    // validation annotation sinks (generate_images_from_dicom.py:92-99)
-    val (valObjects, valCaptions) = annotationFrames(spark, valid)
-    valObjects.coalesce(1).write.mode("overwrite")
-      .json(s"$outDir/validation_object_annotation")
-    valCaptions.coalesce(1).write.mode("overwrite")
-      .json(s"$outDir/validation_caption_annotation")
-
     val skipped = spark.sparkContext.longAccumulator("annotations_skipped")
-    TFRecordSink.write(assembleExamples(augTrain, sources.LabelMap.rsnaIndex, skipped),
-      s"$outDir/tfrecords", "train", trainShards)
-    // stage 2 consumes the validation annotation FILES (S6), not the
-    // in-memory rows — proving the JSON sinks round-trip
-    val valFromFiles = readAnnotations(spark,
-      s"$outDir/validation_object_annotation",
-      s"$outDir/validation_caption_annotation", valid)
-    TFRecordSink.write(assembleExamples(valFromFiles, sources.LabelMap.rsnaIndex, skipped),
-      s"$outDir/tfrecords", "val", valShards)
-    (augTrain.count(), valid.count(), skipped.value)
+    val encodedTrain =
+      encodeExamples(ops.Augment.allPasses(train), sources.LabelMap.rsnaIndex, skipped).cache()
+    val nTrain = encodedTrain.count()
+
+    def writeJson(frames: (DataFrame, DataFrame), objDir: String, capDir: String): Unit = {
+      frames._1.coalesce(1).write.mode("overwrite").json(s"$outDir/$objDir")
+      frames._2.coalesce(1).write.mode("overwrite").json(s"$outDir/$capDir")
+    }
+    Par.par2 {
+      writeJson(annotationFrames(spark, encodedTrain), "object_annotation", "caption_annotation")
+      TFRecordSink.write(records(encodedTrain), s"$outDir/tfrecords", "train", trainShards)
+    } {
+      // validation annotation sinks (generate_images_from_dicom.py:92-99)
+      writeJson(annotationFrames(spark, valid),
+        "validation_object_annotation", "validation_caption_annotation")
+      // stage 2 consumes the validation annotation FILES (S6), not the
+      // in-memory rows — proving the JSON sinks round-trip
+      val valFromFiles = readAnnotations(spark,
+        s"$outDir/validation_object_annotation",
+        s"$outDir/validation_caption_annotation", valid)
+      TFRecordSink.write(assembleExamples(valFromFiles, sources.LabelMap.rsnaIndex, skipped),
+        s"$outDir/tfrecords", "val", valShards)
+    }
+    (nTrain, valid.count(), skipped.value)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * small feature columns out".
   *
   * PNG (and any other `javax.imageio`-readable format) decodes FOR REAL via
-  * [[decodePng]] — the same ImageIO plumbing the stage-1 PNG sink uses.
+  * [[decodePng]], including the stage-1 sink's PNGs ([[graft.Pipeline.pngBytes]]).
   * Codecs genuinely absent from this JVM (DICOM handled separately by
   * [[graft.sources.DicomDecode]], audio, video) fall back to the
   * clearly-marked [[decodeStub]]; the surrounding plumbing — schema,
@@ -38,9 +38,9 @@ object Multimodal {
       mean_byte: Double,
       histogram: Array[Long])
 
-  // in-memory ImageIO streams (no per-call temp-file cache) — see
-  // Pipeline's identical setting; repeated here so either entry point
-  // flips it on the executor JVM
+  // ImageIO defaults to a DISK-backed stream cache: every decode would
+  // write a temp file. In-memory streams are strictly better for byte-array
+  // reads; JVM-wide, set once per executor when this object loads.
   javax.imageio.ImageIO.setUseCache(false)
 
   /** Real image decode via javax.imageio for image-mime payloads: pixels out
@@ -69,8 +69,8 @@ object Multimodal {
         }
         y += 1
       }
-      val sha = java.security.MessageDigest.getInstance("SHA-256").digest(r.payload)
-        .map("%02x".format(_)).mkString
+      val sha = java.util.HexFormat.of().formatHex(
+        java.security.MessageDigest.getInstance("SHA-256").digest(r.payload))
       val n = w.toLong * h
       MediaFeatures(r.media_id, r.payload.length.toLong, sha, w, h,
         if (n == 0) 0.0 else sum.toDouble / n, hist)
@@ -98,8 +98,8 @@ object Multimodal {
       sum += b
       i += 1
     }
-    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
-      .map("%02x".format(_)).mkString
+    val sha = java.util.HexFormat.of().formatHex(
+      java.security.MessageDigest.getInstance("SHA-256").digest(bytes))
     MediaFeatures(
       r.media_id, bytes.length.toLong, sha, r.width, r.height,
       if (bytes.isEmpty) 0.0 else sum.toDouble / bytes.length, hist)

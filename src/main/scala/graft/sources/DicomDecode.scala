@@ -26,7 +26,8 @@ object DicomDecode {
   private val MAGIC_OFFSET = 128
 
   /** Decode one DICOM file's bytes. Throws on compressed/undefined-length
-    * payloads it cannot handle. */
+    * payloads it cannot handle, and on an element — PixelData included —
+    * that is cut short. */
   def decode(bytes: Array[Byte]): DicomImage = {
     require(bytes.length > MAGIC_OFFSET + 4 &&
       new String(bytes, MAGIC_OFFSET, 4, "US-ASCII") == "DICM",
@@ -50,6 +51,7 @@ object DicomDecode {
           vr = "" + b1.toChar + b2.toChar
           buf.position(buf.position() + 2)
           if (Seq("OB", "OW", "OF", "SQ", "UT", "UN").contains(vr)) {
+            require(buf.remaining() >= 6, f"element ($group%04x,$elem%04x) header is cut short")
             buf.getShort() // reserved
             buf.getInt() & 0xFFFFFFFFL
           } else (buf.getShort() & 0xFFFF).toLong
@@ -58,6 +60,8 @@ object DicomDecode {
       if (len == 0xFFFFFFFFL)
         throw new UnsupportedOperationException(
           f"undefined-length element ($group%04x,$elem%04x) — compressed DICOM unsupported")
+      require(len <= buf.remaining(),
+        f"element ($group%04x,$elem%04x) declares $len bytes but only ${buf.remaining()} remain")
 
       (group, elem) match {
         case (0x0028, 0x0010) => rows = buf.getShort() & 0xFFFF
@@ -66,6 +70,9 @@ object DicomDecode {
         case (0x7FE0, 0x0010) =>
           require(rows > 0 && cols > 0, "PixelData before Rows/Columns")
           val n = rows * cols
+          val need = n.toLong * (if (bits <= 8) 1 else 2)
+          require(len >= need,
+            f"PixelData (7fe0,0010) holds $len bytes but $rows x $cols samples of $bits bits need $need")
           pixels = new Array[Short](n)
           if (bits <= 8) {
             var i = 0
@@ -120,11 +127,16 @@ object DicomDecode {
       .option("pathGlobFilter", "*.dcm")
       .load(dir)
       .select(
+        col("path"),
         regexp_replace(element_at(split(col("path"), "/"), -1), "\\.dcm$", "").as("id"),
         col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val img = decode(bytes)
+      .as[(String, String, Array[Byte])]
+      .mapPartitions(_.map { case (path, id, bytes) =>
+        val img =
+          try decode(bytes)
+          catch {
+            case e: RuntimeException => throw new IllegalArgumentException(s"$path: ${e.getMessage}", e)
+          }
         (id, img.pixels, img.cols, img.rows)
       })
   }

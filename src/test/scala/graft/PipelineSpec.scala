@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 import graft.sources.{TFRecordIO, TFRecordSink}
 
@@ -65,6 +66,88 @@ class PipelineSpec extends SparkSpec {
     assert(s(4, 5) === 7)                      // interior untouched
     assert(s(0, 0) === 7)                      // background untouched
     assert(ex.pixels(3 * 10 + 2) === 7)        // input row not mutated
+  }
+
+  test("pngBytes: ImageIO reads back exactly the clipped pixels; IHDR and chunk CRCs valid") {
+    val specials = Seq[Short](-5, 0, 255, 300, 32767)
+    def check(px: Array[Short], w: Int, h: Int): Unit = {
+      val png = Pipeline.pngBytes(px, w, h)
+      val bb = java.nio.ByteBuffer.wrap(png)
+      val sig = new Array[Byte](8)
+      bb.get(sig)
+      assert(sig.toSeq === Seq(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte))
+      val chunks = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
+      while (bb.hasRemaining) {
+        val data = new Array[Byte](bb.getInt())
+        val tag = new Array[Byte](4)
+        bb.get(tag).get(data)
+        val crc = new java.util.zip.CRC32
+        crc.update(tag)
+        crc.update(data)
+        assert(bb.getInt() === crc.getValue.toInt, s"${w}x$h ${new String(tag, "US-ASCII")} CRC")
+        chunks += new String(tag, "US-ASCII") -> data
+      }
+      assert(chunks.map(_._1).toSeq === Seq("IHDR", "IDAT", "IEND"))
+      val ihdr = java.nio.ByteBuffer.wrap(chunks.head._2)
+      assert(chunks.head._2.length === 13)
+      assert(ihdr.getInt() === w && ihdr.getInt() === h)
+      // bit depth 8, grayscale, deflate, adaptive filtering, no interlace
+      assert((0 until 5).map(_ => ihdr.get().toInt) === Seq(8, 0, 0, 0, 0))
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
+      assert(img.getWidth === w && img.getHeight === h)
+      val got = img.getRaster.getPixels(0, 0, w, h, null: Array[Int])
+      assert(got.toSeq === px.toSeq.map(v => math.min(255, math.max(0, v.toInt))), s"${w}x$h pixels")
+    }
+    specials.foreach(v => check(Array(v), 1, 1))
+    val rng = new scala.util.Random(7)
+    Seq((7, 3), (64, 1), (512, 512)).foreach { case (w, h) =>
+      val px = Array.tabulate[Short](w * h)(i =>
+        if (i < specials.length) specials(i) else (rng.nextInt(600) - 100).toShort)
+      check(px, w, h)
+    }
+  }
+
+  test("end-to-end: repeat runs write identical files; skipped counts each dropped box once") {
+    def run(): (String, (Long, Long, Long)) = {
+      val out = java.nio.file.Files.createTempDirectory("graft_e2e_det").toString
+      (out, Pipeline.runEndToEnd(spark, fixtureImages, fixtureLabels, out,
+        trainShards = 4, valShards = 2))
+    }
+    val (a, resA) = run()
+    val (b, resB) = run()
+    assert(resA === resB)
+
+    def shards(dir: String) = new java.io.File(s"$dir/tfrecords").listFiles()
+      .filter(_.getName.endsWith(".tfrecord")).sortBy(_.getName).toSeq
+    assert(shards(a).map(_.getName) === shards(b).map(_.getName))
+    shards(a).zip(shards(b)).foreach { case (fa, fb) =>
+      assert(java.util.Arrays.equals(
+        java.nio.file.Files.readAllBytes(fa.toPath), java.nio.file.Files.readAllBytes(fb.toPath)),
+        s"${fa.getName} differs between runs")
+    }
+    val sinks = Seq("object_annotation", "caption_annotation",
+      "validation_object_annotation", "validation_caption_annotation")
+    sinks.foreach { d =>
+      def rows(dir: String) = spark.read.text(s"$dir/$d").as[String].collect().sorted.toSeq
+      assert(rows(a) === rows(b), d)
+    }
+
+    // every box in an object JSON either reaches its record's bbox lists or
+    // is counted as skipped — exactly once
+    def jsonBoxes(d: String): Long =
+      spark.read.schema("id string, boxes array<array<int>>").json(s"$a/$d")
+        .select(sum(functions.size(col("boxes")))).as[Long].head()
+    def recordBoxes(prefix: String): Long =
+      TFRecordSink.readAll(s"$a/tfrecords", prefix).map { r =>
+        TFRecordIO.decodeExample(r).get("image/object/bbox/xmin") match {
+          case Some(TFRecordIO.FloatFeature(vs)) => vs.length.toLong
+          case _ => 0L
+        }
+      }.sum
+    val dropped = (jsonBoxes("object_annotation") - recordBoxes("train")) +
+      (jsonBoxes("validation_object_annotation") - recordBoxes("val"))
+    assert(dropped > 0) // the fixture's shifted boxes do leave the frame
+    assert(resA._3 === dropped)
   }
 
   test("end-to-end: counts, annotations, shards, example schema") {

@@ -23,6 +23,38 @@ class DicomDecodeSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](DicomDecode.decode(Array.fill(200)(1.toByte)))
   }
 
+  test("a PixelData element shorter than rows x cols samples is rejected") {
+    val full = DicomDecode.writeMinimal(8, 8, gradient(8, 8))
+    // PixelData comes last: its 4-byte length sits right before the 64 pixel bytes
+    val short = java.nio.ByteBuffer.wrap(full.take(full.length - 10))
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    short.putInt(full.length - 64 - 4, 54)
+    // a 10-byte element after the short PixelData: (fffc,fffc) US, value 0
+    val trailing = java.nio.ByteBuffer.allocate(10).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putShort(0xFFFC.toShort).putShort(0xFFFC.toShort)
+      .put('U'.toByte).put('S'.toByte).putShort(2).putShort(0)
+    val e = intercept[IllegalArgumentException](
+      DicomDecode.decode(short.array() ++ trailing.array()))
+    assert(e.getMessage.contains("(7fe0,0010) holds 54 bytes"), e.getMessage)
+    assert(e.getMessage.contains("need 64"), e.getMessage)
+  }
+
+  test("a cut file is rejected with the element's lengths; the scan names the file") {
+    val full = DicomDecode.writeMinimal(8, 8, gradient(8, 8))
+    val cut = full.take(full.length - 20)
+    val e = intercept[IllegalArgumentException](DicomDecode.decode(cut))
+    assert(e.getMessage.contains("(7fe0,0010) declares 64 bytes but only 44 remain"), e.getMessage)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_dcm_cut")
+    java.nio.file.Files.write(dir.resolve("p001.dcm"), full)
+    java.nio.file.Files.write(dir.resolve("p002.dcm"), cut)
+    val err = intercept[Exception](DicomDecode.scanDicomDir(spark, dir.toString).collect())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("p002.dcm") && m.contains("declares 64 bytes")),
+      messages.mkString("\n"))
+  }
+
   test("binaryFile scan with suffix filter decodes a directory (S2+S3+P3)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dcm")
     (1 to 5).foreach { i =>
