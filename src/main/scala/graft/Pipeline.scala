@@ -83,7 +83,7 @@ object Pipeline {
     * standardization of the reference's listing-order split). Exact-count
     * but NOT scale-safe: row_number over a partition-less window funnels
     * every row through one task, plus a driver-side count. Kept for
-    * fidelity tests; [[hashSplit8020]] is the pipeline default. */
+    * fidelity tests; [[hashSplit8020]] is the split [[runEndToEnd]] uses. */
   def split8020(ds: Dataset[ImageEx]): (Dataset[ImageEx], Dataset[ImageEx]) = {
     import ds.sparkSession.implicits._
     val n = ds.count()
@@ -191,17 +191,6 @@ object Pipeline {
       while (y <= b.y + b.h) { set(b.x, y); set(b.x + b.w, y); y += 1 }
     }
     pngBytes(px, w, h)
-  }
-
-  /** K6 as a directory sink: one {id}_boxed.png per image. */
-  def writeDebugViz(ds: Dataset[ImageEx], dir: String): Unit = {
-    new java.io.File(dir).mkdirs()
-    ds.foreachPartition { (it: Iterator[ImageEx]) =>
-      it.foreach { ex =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, s"${ex.id}_boxed.png"), pngWithBoxes(ex))
-      }
-    }
   }
 
   /** Stage-2 suffix dispatch (P8, images_to_tfrecord.py:187-200): augmented
@@ -329,11 +318,10 @@ object Pipeline {
   /** Full stage-1 + stage-2 run over an in-memory image set; returns
     * (train example count, val example count, skipped annotations).
     *
-    * `split` defaults to the scale-safe [[hashSplit8020]]; pass
-    * [[split8020]] for the reference's exact-count id-order semantics.
-    * Both stages' annotation JSONs are written for train AND validation
-    * (reference generate_images_from_dicom.py:92-99,569-576), and the
-    * validation TFRecords are built from the annotation FILES read back
+    * The split is the scale-safe [[hashSplit8020]]. Both stages'
+    * annotation JSONs are written for train AND validation (reference
+    * generate_images_from_dicom.py:92-99,569-576), and the validation
+    * TFRecords are built from the annotation FILES read back
     * (images_to_tfrecord.py:280-285) — the sinks round-trip for real.
     *
     * The augmented train set is encoded once into a cached
@@ -342,12 +330,10 @@ object Pipeline {
     * validation chain then run side by side. */
   def runEndToEnd(spark: SparkSession, images: Dataset[(String, Array[Short], Int, Int)],
       labels: DataFrame, outDir: String,
-      trainShards: Int = 256, valShards: Int = 32,
-      split: Dataset[ImageEx] => (Dataset[ImageEx], Dataset[ImageEx]) = hashSplit8020)
-      : (Long, Long, Long) = {
+      trainShards: Int = 256, valShards: Int = 32): (Long, Long, Long) = {
     val maps = createMaps(labels)
     val annotated = annotate(spark, images, maps).cache()
-    val (train, valid) = split(annotated)
+    val (train, valid) = hashSplit8020(annotated)
 
     val skipped = spark.sparkContext.longAccumulator("annotations_skipped")
     val encodedTrain =

@@ -92,6 +92,36 @@ object Kernels {
     (out, boxes.map(b => Box(w - b.x - b.w, b.y, b.w, b.h)))
   }
 
+  /** Copy the pw×ph patch at (bx, by) out of `img` and zero the hole
+    * (the box is already clipped to the image). */
+  private def cutPatch(img: Array[Short], w: Int, bx: Int, by: Int,
+      pw: Int, ph: Int): Array[Short] = {
+    val patch = new Array[Short](ph * pw)
+    var r = 0
+    while (r < ph) {
+      val at = (by + r) * w + bx
+      System.arraycopy(img, at, patch, r * pw, pw)
+      java.util.Arrays.fill(img, at, at + pw, 0.toShort)
+      r += 1
+    }
+    patch
+  }
+
+  /** Paste a pw×ph patch with its origin at (nx, ny), dropping the pixels
+    * that fall outside the w×h image. */
+  private def pasteClipped(img: Array[Short], w: Int, h: Int,
+      patch: Array[Short], pw: Int, ph: Int, nx: Int, ny: Int): Unit = {
+    val c0 = math.max(0, -nx)
+    val c1 = math.min(pw, w - nx)
+    if (c1 > c0) {
+      var r = math.max(0, -ny)
+      while (r < ph && ny + r < h) {
+        System.arraycopy(patch, r * pw + c0, img, (ny + r) * w + nx + c0, c1 - c0)
+        r += 1
+      }
+    }
+  }
+
   // ------------------------------------------------------------------- K3
   /** shift_bbox (`:140-169`): per box — draw (rx, ry) from ±(x, y),
     * rejection-sample while the new origin is negative; cut the patch, zero
@@ -113,14 +143,7 @@ object Kernels {
         rx = rng.randint(-maxX, maxX)
         ry = rng.randint(-maxY, maxY)
       }
-      val patch = new Array[Short](ph * pw)
-      var r = 0
-      while (r < ph) {
-        System.arraycopy(img, (by + r) * w + bx, patch, r * pw, pw)
-        var c = 0
-        while (c < pw) { img((by + r) * w + bx + c) = 0; c += 1 }
-        r += 1
-      }
+      val patch = cutPatch(img, w, bx, by, pw, ph)
       val others = boxes.indices.filter(_ != idx).map(boxes)
       val corners = Seq(
         (bx + rx, by + ry), (bx + pw + rx, by + ry),
@@ -128,19 +151,7 @@ object Kernels {
       if (!others.exists(o => corners.exists { case (cx, cy) => inside(o, cx, cy) })) {
         val ny = by + ry
         val nx = bx + rx
-        r = 0
-        while (r < ph) {
-          val dr = ny + r
-          if (dr >= 0 && dr < h) {
-            var c = 0
-            while (c < pw) {
-              val dc = nx + c
-              if (dc >= 0 && dc < w) img(dr * w + dc) = patch(r * pw + c)
-              c += 1
-            }
-          }
-          r += 1
-        }
+        pasteClipped(img, w, h, patch, pw, ph, nx, ny)
         out += Box(nx, ny, pw, ph)
       }
       }
@@ -183,14 +194,7 @@ object Kernels {
         rf = rng.uniform(1.0 / (1.0 + factor), 1.0 + factor)
         attempts += 1
       }
-      val patch = new Array[Short](ph * pw)
-      var r = 0
-      while (r < ph) {
-        System.arraycopy(img, (by + r) * w + bx, patch, r * pw, pw)
-        var c = 0
-        while (c < pw) { img((by + r) * w + bx + c) = 0; c += 1 }
-        r += 1
-      }
+      val patch = cutPatch(img, w, bx, by, pw, ph)
       val nh = math.max(1, rint(ph * rf))
       val nw = math.max(1, rint(pw * rf))
       val scaled = resizeNearest(patch, pw, ph, nw, nh)
@@ -198,19 +202,7 @@ object Kernels {
       val cx = bx + rint(pw / 2.0)
       val ny = math.max(0, cy - rint((ph * rf) / 2.0))
       val nx = math.max(0, cx - rint((pw * rf) / 2.0))
-      r = 0
-      while (r < nh) {
-        val dr = ny + r
-        if (dr >= 0 && dr < h) {
-          var c = 0
-          while (c < nw) {
-            val dc = nx + c
-            if (dc >= 0 && dc < w) img(dr * w + dc) = scaled(r * nw + c)
-            c += 1
-          }
-        }
-        r += 1
-      }
+      pasteClipped(img, w, h, scaled, nw, nh, nx, ny)
       out += Box(nx, ny, rint(pw * rf), rint(ph * rf))
       }
     }

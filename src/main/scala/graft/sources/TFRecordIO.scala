@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException,
+  FileInputStream, FileOutputStream, IOException, InputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32C
 
@@ -206,29 +207,21 @@ object TFRecordIO {
     def close(): Unit = out.close()
   }
 
-  /** Read all records of one TFRecord file, verifying both CRCs. */
+  /** Read all records of one local TFRecord file, verifying both CRCs. */
   def readFile(path: String): Iterator[Array[Byte]] =
-    readRecords(new DataInputStream(
-      new BufferedInputStream(new FileInputStream(path), 1 << 16)), path)
+    readStream(new FileInputStream(path), path)
 
-  /** Read all records of one shard's raw bytes (e.g. the `content` column
-    * of a binaryFile scan row), verifying both CRCs — the executor-side
-    * reader behind [[TFRecordSink.scan]]. Same framing core as
-    * [[readFile]]; `what` labels CRC errors with the source shard. */
-  def readBytes(data: Array[Byte], what: String): Iterator[Array[Byte]] =
-    readRecords(new DataInputStream(new java.io.ByteArrayInputStream(data)), what)
-
-  /** Stream records off an open input stream (closed at EOF) — the framing
-    * is sequential (length-prefixed), so a shard of any size reads in
-    * O(record) memory; TFRecordSink.scan's oversized-shard path uses this
-    * over a Hadoop FS stream instead of materializing the whole file. */
-  def readStream(in: java.io.InputStream, what: String): Iterator[Array[Byte]] =
-    readRecords(new DataInputStream(new BufferedInputStream(in, 1 << 16)), what)
-
-  private def readRecords(in: DataInputStream, what: String): Iterator[Array[Byte]] =
+  /** Stream the records of one shard off an open input stream (closed at
+    * EOF), verifying both CRCs — the one framing core behind [[readFile]]
+    * and [[TFRecordSink.scan]]. The framing is sequential
+    * (length-prefixed), so a shard of any size reads in O(record) memory.
+    * `what` names the shard in errors; a record cut short by the end of
+    * the stream is an error, not the end of the shard. */
+  def readStream(stream: InputStream, what: String): Iterator[Array[Byte]] =
     new Iterator[Array[Byte]] {
+      private val in = new DataInputStream(new BufferedInputStream(stream, 1 << 16))
       private var nextRec: Array[Byte] = advance()
-      private def advance(): Array[Byte] = {
+      private def advance(): Array[Byte] = try {
         val lenBuf = new Array[Byte](8)
         val first = in.read()
         if (first < 0) { in.close(); return null }
@@ -242,6 +235,10 @@ object TFRecordIO {
         val dataCrc = readIntLE()
         require(dataCrc == maskedCrc32c(data), s"data crc mismatch in $what")
         data
+      } catch {
+        case e: EOFException =>
+          in.close()
+          throw new IOException(s"truncated record at the end of $what", e)
       }
       private def readIntLE(): Int = {
         val b = new Array[Byte](4)
@@ -251,7 +248,7 @@ object TFRecordIO {
       def hasNext: Boolean = nextRec != null
       def next(): Array[Byte] = {
         val r = nextRec
-        nextRec = try advance() catch { case _: EOFException => in.close(); null }
+        nextRec = advance()
         r
       }
     }

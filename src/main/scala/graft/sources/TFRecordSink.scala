@@ -1,7 +1,12 @@
 package graft.sources
 
 import java.io.File
-import org.apache.spark.TaskContext
+import java.util.regex.Pattern
+
+import scala.util.matching.Regex
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.{SerializableWritable, TaskContext}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Sharded TFRecord sink (SURVEY §2.1 S8, images_to_tfrecord.py:228-261).
@@ -12,6 +17,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * shard file in parallel — the reference's single-writer bottleneck gone.
   * Shard naming preserved: `{prefix}-%05d-of-%05d.tfrecord` (:229).
   *
+  * A shard set is exactly the files named `{prefix}-NNNNN-of-NNNNN.tfrecord`
+  * in `dir`: `write`'s stale-shard delete, [[scan]] and [[readAll]] all
+  * select files by that one name rule, so the sets `val` and `val-hard`
+  * share a directory without touching each other.
+  *
   * At cluster scale the same pattern holds (tasks write to distributed
   * storage); a DataSourceV2 wrapper would only add commit-protocol niceties.
   */
@@ -20,19 +30,28 @@ object TFRecordSink {
   def shardPath(dir: String, prefix: String, idx: Int, numShards: Int): String =
     f"$dir/$prefix-$idx%05d-of-$numShards%05d.tfrecord"
 
-  /** Write pre-encoded tf.Example records into numShards files. Any
-    * pre-existing `$prefix-*.tfrecord` files are deleted first (round-15
-    * ADVICE): a re-write with a different numShards would otherwise leave
-    * the old set's extra shards behind — e.g. `-00007-of-00008` alongside
-    * a fresh `-of-00004` set — and scan()'s prefix glob would silently
-    * return the union. Overwrite-means-overwrite, like every other sink. */
+  /** The file names of the set `prefix`: exactly
+    * `{prefix}-NNNNN-of-NNNNN.tfrecord`, so `val` never claims `val-hard-…`. */
+  private def shardName(prefix: String): Regex =
+    (Pattern.quote(prefix) + """-\d{5}-of-\d{5}\.tfrecord""").r
+
+  /** The shard files of a set in a local directory, in name order. */
+  private def localShards(dir: String, prefix: String): Seq[File] = {
+    val shard = shardName(prefix)
+    Option(new File(dir).listFiles()).toSeq.flatten
+      .filter(f => shard.matches(f.getName)).sortBy(_.getName)
+  }
+
+  /** Write pre-encoded tf.Example records into numShards files. The set's
+    * existing shards are deleted first: a re-write with a different
+    * numShards would otherwise leave the old set's extra shards behind
+    * (e.g. `-00007-of-00008` next to a fresh `-of-00004` set) and scan
+    * would return the union. Overwrite-means-overwrite, like every other
+    * sink. */
   def write(examples: Dataset[Array[Byte]], dir: String, prefix: String,
       numShards: Int): Unit = {
     new File(dir).mkdirs()
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(s"$prefix-") &&
-        f.getName.endsWith(".tfrecord"))
-      .foreach(_.delete())
+    localShards(dir, prefix).foreach(_.delete())
     examples.repartition(numShards).foreachPartition {
       (it: Iterator[Array[Byte]]) =>
         val pid = TaskContext.getPartitionId()
@@ -41,80 +60,41 @@ object TFRecordSink {
     }
   }
 
-  /** Recommended per-shard ceiling, and the scan's materialization cutoff
-    * (round-15 judge ask #5 — the "raise numShards with the corpus"
-    * comment is now an enforced contract): size `numShards` so shards
-    * land at or under this (numShards ≈ ceil(totalBytes / 256 MiB)).
-    * binaryFile materializes one WHOLE shard per row, so an oversized
-    * shard is a per-task memory hazard long before the source's hard
-    * 2 GiB cap; past this cutoff [[scan]] switches that shard set to the
-    * chunked reader, which streams records in O(record) memory — still
-    * one task per shard (a 10 GiB shard remains one unit of parallelism:
-    * the warning tells the producer to re-shard, the fallback just makes
-    * the read survive it). */
-  val MaxMaterializedShardBytes: Long = 256L << 20
-
-  /** Distributed scan of a sharded set (round-14 judge ask #5 — the
-    * re-ingestion path, so stage-2 output is consumable at scale): one
-    * binaryFile row per shard fans the shard files across tasks, and each
-    * task runs the SAME framing/CRC reader as the driver-side
-    * [[readAll]] over its shard's bytes. The shard file is the
-    * parallelism unit; the memory unit is bounded by
-    * [[MaxMaterializedShardBytes]] — a driver-side glob (one listing RPC,
-    * the same listing binaryFile would do) checks shard sizes first, and
-    * a set containing any oversized shard is read via the chunked
-    * per-shard STREAM reader (TFRecordIO.readStream over a Hadoop FS
-    * stream, O(record) memory) with a loud warning instead of
-    * materializing whole files. Oracle-checked end-to-end by
+  /** Distributed scan of a sharded set — the re-ingestion path, so stage-2
+    * output is consumable at scale. The driver lists the set once; the
+    * shards are spread over `defaultParallelism` tasks, and each task opens
+    * its shards through the session's Hadoop configuration (broadcast once)
+    * and streams them through the framing/CRC reader
+    * ([[TFRecordIO.readStream]]), so a shard of any size reads in
+    * O(record) memory. A CRC failure fails the task and names the shard; a
+    * set with no shards fails the call. Oracle-checked end-to-end by
     * q51_tfrecord_scan (value roundtrip vs the source table) and
     * TFRecordScanSpec (sha256 multiset equality vs readAll, CRC failure
-    * surfaced from an executor, oversized-shard fallback equality). */
-  def scan(spark: SparkSession, dir: String, prefix: String,
-      maxMaterializedBytes: Long = MaxMaterializedShardBytes): Dataset[Array[Byte]] = {
+    * surfaced from an executor). */
+  def scan(spark: SparkSession, dir: String, prefix: String): Dataset[Array[Byte]] = {
     import spark.implicits._
-    val glob = new org.apache.hadoop.fs.Path(dir, s"$prefix-*.tfrecord")
-    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = fs.globStatus(glob)
-    val oversized =
-      if (statuses == null) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else statuses.filter(_.getLen > maxMaterializedBytes)
-    if (oversized.isEmpty) {
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", s"$prefix-*.tfrecord")
-        .load(dir)
-        .select("path", "content").as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) => TFRecordIO.readBytes(bytes, path) }
-    } else {
-      org.apache.log4j.Logger.getLogger(getClass).warn(
-        s"TFRecordSink.scan: ${oversized.length} shard(s) under $dir/$prefix-* " +
-          s"exceed $maxMaterializedBytes bytes (largest " +
-          s"${oversized.map(_.getLen).max}); falling back to the chunked " +
-          "stream reader. Each shard is still ONE task — re-shard the set " +
-          "(raise numShards at write time) to restore parallelism.")
-      val paths = statuses.map(_.getPath.toString).sorted.toSeq
-      spark.createDataset(paths)
-        .repartition(paths.size)
-        .mapPartitions { it =>
-          it.flatMap { p =>
-            // default Configuration on the executor: resolves file:// and
-            // whatever fs.* the cluster ships on its classpath resources —
-            // the same resolution executors use for any side-channel read
-            val path = new org.apache.hadoop.fs.Path(p)
-            val taskFs = path.getFileSystem(
-              new org.apache.hadoop.conf.Configuration())
-            TFRecordIO.readStream(taskFs.open(path), p)
-          }
-        }
-    }
+    val sc = spark.sparkContext
+    val conf = sc.hadoopConfiguration
+    val shard = shardName(prefix)
+    val root = new Path(dir)
+    val paths = root.getFileSystem(conf).listStatus(root).map(_.getPath)
+      .filter(p => shard.matches(p.getName)).map(_.toString).sorted.toSeq
+    require(paths.nonEmpty, s"no TFRecord shards of set '$prefix' in $dir")
+    val taskConf = sc.broadcast(new SerializableWritable(conf))
+    sc.parallelize(paths, math.min(paths.size, sc.defaultParallelism))
+      .flatMap { p =>
+        val path = new Path(p)
+        val in = path.getFileSystem(taskConf.value.value).open(path)
+        // closes the shard if the task stops early (a limit, a CRC failure)
+        TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        TFRecordIO.readStream(in, p)
+      }
+      .toDS()
   }
 
   /** Read every record of a sharded set back — the driver-side twin of
-    * [[scan]] for tests/verification on local paths (same per-shard
-    * framing reader, same name order as the round-robin write). */
-  def readAll(dir: String, prefix: String): Iterator[Array[Byte]] = {
-    val files = Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(s"$prefix-") && f.getName.endsWith(".tfrecord"))
-      .sortBy(_.getName)
-    files.iterator.flatMap(f => TFRecordIO.readFile(f.getPath))
-  }
+    * [[scan]] for tests/verification on local paths (same shard-name rule
+    * and framing reader, same name order as the round-robin write). */
+  def readAll(dir: String, prefix: String): Iterator[Array[Byte]] =
+    localShards(dir, prefix).iterator.flatMap(f => TFRecordIO.readFile(f.getPath))
 }

@@ -55,6 +55,17 @@ class TFRecordIOSpec extends AnyFunSuite {
     assertThrows[Exception](readFile(tmp).toSeq)
   }
 
+  test("a file cut inside its last record fails the read instead of ending early") {
+    val tmp = java.nio.file.Files.createTempFile("graft", ".tfrecord")
+    val w = new Writer(tmp.toString)
+    (0 until 3).foreach(i => w.write(encodeExample(Map("id" -> Feature.int64(i.toLong)))))
+    w.close()
+    val raw = java.nio.file.Files.readAllBytes(tmp)
+    java.nio.file.Files.write(tmp, raw.take(raw.length - 2))
+    val ex = intercept[java.io.IOException](readFile(tmp.toString).toSeq)
+    assert(ex.getMessage === s"truncated record at the end of $tmp")
+  }
+
   test("encoding is deterministic (sorted feature order)") {
     val a = encodeExample(Map("b" -> Feature.int64(1), "a" -> Feature.str("x")))
     val b = encodeExample(Map("a" -> Feature.str("x"), "b" -> Feature.int64(1)))

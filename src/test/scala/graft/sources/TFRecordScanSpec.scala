@@ -5,12 +5,14 @@ import java.security.MessageDigest
 import graft.SparkSpec
 import TFRecordIO._
 
-/** The distributed TFRecord scan (round-14 judge ask #5): binaryFile over
-  * the shard files → per-task framing/CRC reader. Gates: the scan returns
-  * exactly the multiset readAll returns (sha256 multiset equality — byte
-  * identity per record, order-free), absent features decode to None, and
-  * a corrupted shard fails the scan LOUDLY from an executor instead of
-  * returning garbage. */
+/** The distributed TFRecord scan: the set's shard files spread over tasks
+  * → per-task streaming framing/CRC reader. Gates: the scan returns exactly
+  * the multiset readAll returns (sha256 multiset equality — byte identity
+  * per record, order-free), also when most shards are empty; absent
+  * features decode to None; a corrupted shard fails the scan LOUDLY from an
+  * executor instead of returning garbage; and a shard set is exactly its
+  * own `{prefix}-NNNNN-of-NNNNN.tfrecord` files, so re-writes and sets
+  * whose prefix extends another's leave each other alone. */
 class TFRecordScanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,15 +35,18 @@ class TFRecordScanSpec extends SparkSpec {
   }
 
   test("scan == readAll as a sha256 multiset, and counts match") {
-    val dir = writeFixture(500, 8)
     val shaLocal: Array[Byte] => String = b =>
       MessageDigest.getInstance("SHA-256").digest(b)
         .map("%02x".format(_)).mkString
-    val viaScan = TFRecordSink.scan(spark, dir, "part")
-      .map(shaLocal).collect().toSeq
-    val viaDriver = TFRecordSink.readAll(dir, "part").map(sha).toSeq
-    assert(viaScan.size === 500)
-    assert(viaScan.sorted === viaDriver.sorted)
+    // 5 records in 8 shards: the benchmark's shape, with empty shards
+    for ((n, shards) <- Seq((500, 8), (5, 8))) {
+      val dir = writeFixture(n, shards)
+      val viaScan = TFRecordSink.scan(spark, dir, "part")
+        .map(shaLocal).collect().toSeq
+      val viaDriver = TFRecordSink.readAll(dir, "part").map(sha).toSeq
+      assert(viaScan.size === n)
+      assert(viaScan.sorted === viaDriver.sorted)
+    }
   }
 
   test("scan decodes absent features as None (the format's null spelling)") {
@@ -72,28 +77,9 @@ class TFRecordScanSpec extends SparkSpec {
       Option(ex.getCause).exists(_.getMessage.contains("crc mismatch")))
   }
 
-  test("oversized shards take the chunked stream reader, byte-identically") {
-    // round-15 judge ask #5: binaryFile materializes one whole shard per
-    // task, so the scan's size guard must route a set containing an
-    // oversized shard to the O(record)-memory stream reader. A 1-byte
-    // threshold makes EVERY shard "oversized" — the fallback must return
-    // exactly the multiset the materializing path returns.
-    val dir = writeFixture(300, 4)
-    val shaLocal: Array[Byte] => String = b =>
-      MessageDigest.getInstance("SHA-256").digest(b)
-        .map("%02x".format(_)).mkString
-    val streamed = TFRecordSink.scan(spark, dir, "part",
-      maxMaterializedBytes = 1L).map(shaLocal).collect().toSeq
-    val materialized = TFRecordSink.scan(spark, dir, "part")
-      .map(shaLocal).collect().toSeq
-    assert(streamed.size === 300)
-    assert(streamed.sorted === materialized.sorted)
-  }
-
   test("re-write with a different shard count leaves no stale shards behind") {
-    // round-15 ADVICE: scan's prefix glob matches ANY -of-N suffix, so a
-    // second write with fewer shards must delete the first set or the
-    // scan silently unions old and new records.
+    // a set's shards match ANY -of-N suffix, so a second write with fewer
+    // shards must delete the first set or the scan unions old and new.
     val dir = writeFixture(500, 8)
     val recs = spark.range(0, 60L).map(i =>
       encodeExample(Map("id" -> Feature.int64(i)): Map[String, Feature]))
@@ -101,5 +87,30 @@ class TFRecordScanSpec extends SparkSpec {
     assert(TFRecordSink.scan(spark, dir, "part").count() === 60L,
       "stale -of-00008 shards must not survive a -of-00004 re-write")
     assert(TFRecordSink.readAll(dir, "part").size === 60)
+  }
+
+  test("sets whose prefix extends another's stay apart in one directory") {
+    val dir = java.nio.file.Files.createTempDirectory("tfscan").toString
+    // every record carries the name of the set it was written to
+    def writeSet(prefix: String, n: Int, shards: Int): Unit =
+      TFRecordSink.write(spark.range(0, n.toLong).map(i => encodeExample(
+        Map("set" -> Feature.str(prefix), "id" -> Feature.int64(i)): Map[String, Feature])),
+        dir, prefix, shards)
+    def assertOnly(prefix: String, n: Int): Unit = {
+      val set: Array[Byte] => String = b => strOpt(decodeExample(b), "set").get
+      assert(TFRecordSink.scan(spark, dir, prefix).map(set).collect().toSeq ===
+        Seq.fill(n)(prefix))
+      assert(TFRecordSink.readAll(dir, prefix).map(set).toSeq === Seq.fill(n)(prefix))
+    }
+    writeSet("val-hard", 6, 2)
+    writeSet("val", 9, 3)
+    assertOnly("val-hard", 6) // the `val` write left these shards alone
+    assertOnly("val", 9)
+    writeSet("val-hard", 4, 2)
+    assertOnly("val", 9) // and the `val-hard` re-write left these alone
+    assertOnly("val-hard", 4)
+    // `va` names no set here: the scan fails instead of reading nothing
+    val ex = intercept[IllegalArgumentException](TFRecordSink.scan(spark, dir, "va"))
+    assert(ex.getMessage.contains("no TFRecord shards of set 'va'"))
   }
 }
