@@ -9,8 +9,14 @@ Validates three citation classes found in COVERAGE.md against src/main:
   3. `q…`/`x…`/`aug…` — the query name (or its bare prefix, e.g. `x313`
                         for x313_sign_test) is a registered QuerySpec.
 
+and one class in the run docs (README.md and the verify skill by default,
+or the files given as arguments):
+  4. `runMain graft.<Name>` — an `object <Name>` exists under src/.
+
 Exit 0 with a summary line when every anchor resolves; exit 1 listing
 each dangling anchor otherwise. Dev-only tooling, like check.py.
+
+Usage: scripts/check_anchors.py [runDoc ...]
 """
 import glob
 import os
@@ -18,9 +24,13 @@ import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# README plus the verify skill's recipe (kept in a hidden tool directory)
+RUN_DOCS = ["README.md"] + sorted(
+    os.path.relpath(p, ROOT)
+    for p in glob.glob(os.path.join(ROOT, ".*", "skills", "verify", "SKILL.md")))
 
 
-def main() -> int:
+def main(run_docs) -> int:
     md = open(os.path.join(ROOT, "COVERAGE.md")).read()
 
     # --- index src/ ---------------------------------------------------
@@ -65,14 +75,21 @@ def main() -> int:
         if q not in qnames and q not in prefixes:
             bad.append(f"`{q}`: not a registered QuerySpec name (or prefix)")
 
+    # --- 4. runMain targets in the run docs ----------------------------
+    for doc in run_docs:
+        text = open(os.path.join(ROOT, doc)).read()
+        for name in sorted(set(re.findall(r"runMain graft\.(\w+)", text))):
+            if name not in obj_file:
+                bad.append(f"{doc}: `runMain graft.{name}`: no object {name} in src/")
+
     if bad:
         print("\n".join(bad))
         print(f"== {len(bad)} dangling anchor(s)")
         return 1
-    print(f"== all COVERAGE.md anchors resolve "
+    print(f"== all COVERAGE.md anchors and runMain targets resolve "
           f"({len(qnames)} registry names, {len(scala)} scala files indexed)")
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:] or RUN_DOCS))

@@ -31,30 +31,13 @@ object Bench {
     val startNs = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - startNs) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 900 → 1020 in round 13 (the round-12 verdict's ask #5 sanctions a
     // modest raise); round 14 additionally dropped the separate warm pass
     // (pass 1 warms), so cold pass 1 + a FULL warm pass 2 fits ~1000 s
     // even at driver-host speeds — every query's record becomes a min
     // over ≥2 reps (multi_rep == registry size) instead of r13's 262.
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1020").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Codegen class cache sized to the workload (round 17, guide §1.2
-      // "fixed per-query overhead"): the static default (100 entries)
-      // holds ~10 queries' worth of WholeStageCodegen units, so a
-      // 392-query pass evicts EVERYTHING between a query's pass-1 and
-      // pass-2 reps and every rep re-compiles every stage (Janino,
-      // ~20-80 ms per unit, driver-side serial). Production multi-query
-      // drivers size this cache to their live query set for exactly this
-      // reason; scale-independent (it caches compiled classes keyed by
-      // generated source, never data or results).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 32)
     // Each query is timed up to `reps` times and the MIN is reported: a
     // single pass lets co-tenant host stalls pollute the official artifact
     // (round 5's run absorbed 100-300x stalls on individual queries —

@@ -2,130 +2,30 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Plan-audit tool: dumps `explain("formatted")` for representative queries
-  * so shuffle count, filter/column pushdown, broadcast choices and
+/** Plan-audit tool: dumps `explain("formatted")` for registry queries so
+  * shuffle count, filter/column pushdown, broadcast choices and
   * WholeStageCodegen spans can be reviewed (the 100 TB design check).
-  * Usage: runMain graft.Explain [sfDir] [outFile]
+  * Plans come from the Bench session shape ([[LocalSession]]), so the
+  * dumped plan is the one the bench executes.
+  *
+  * Usage: runMain graft.Explain <sfDir> <outFile> [name,...]
+  * With no names it dumps every [[SparkEntry.queries]] key, sorted.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val outFile = args.lift(1).getOrElse("/tmp/graft_plans.txt")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val interesting = Seq(
-      "q1_pricing_summary", "q3_regional_revenue", "q5_semi_join",
-      "q9_window_topk", "q26_tumbling_window", "q34_asof_join",
-      "q45_sketch_approx", "q48_orc_roundtrip", "q49_partition_pruned_scan",
-      "q51_tfrecord_scan",
-      "x2_dedup_minhash", "x4_ngram_jaccard", "x5_cosine_topk",
-      "x13_ann_ivf", "x19_sequence_packing", "x21_contamination",
-      "x27_segment_dedup", "x29_tfidf_topterm", "x32_unicode_normalize",
-      "x40_unigram_lm", "x41_dsir_weights", "x42_pq_adc_topk",
-      "x44_bigram_lm", "x45_bloom_contamination", "x46_hll_distinct",
-      "x48_zorder_key", "x49_stratified_sample",
-      "x50_quality_classifier", "x51_random_projection", "x53_cms_heavy_hitters",
-      "x54_centroid_outliers", "x55_curriculum_order",
-      "x57_ivfpq_topk", "x58_containment", "x59_source_kl", "x61_cdc_chunks",
-      "x68_ivfpq_refined", "x70_ivfpq_index_roundtrip",
-      "x71_soft_dedup_weights", "x72_repetition_metrics",
-      "x78_retention_cohorts", "x80_funnel",
-      "x83_ivfpq_retrain_swap", "x84_opq_rotation_eval", "x85_item_pmi",
-      "x86_shuffle_shard", "x87_embedding_drift", "x88_leakage_safe_split",
-      "x89_source_cap", "x90_vocab_coverage", "x91_deletion_sweep",
-      "x92_matryoshka_recall", "x93_budget_selection", "x94_hybrid_rrf",
-      "x95_volume_anomaly", "x96_temperature_mix", "x97_boilerplate_strip",
-      "x98_next_event_eval", "x99_suffix_dedup", "x100_dict_tag",
-      "x101_item_pagerank", "x102_column_profile", "x103_k_anonymity",
-      "x104_value_histogram", "x105_psi", "x106_bm25_topk",
-      "x107_image_neardup", "x108_scd2_history", "x109_hard_negatives",
-      "x110_bitext_margin", "x111_labeler_agreement", "x112_dim_lookup_asof",
-      "x113_kcenter_coreset", "x114_triangle_count",
-      "x115_bloom_pruned_join", "x116_record_linkage",
-      "x117_snapshot_diff", "x118_peak_concurrency",
-      "x119_quantile_normalize", "x120_label_propagation",
-      "x121_logreg_train", "x122_holt_trend", "x123_audio_features",
-      "x124_kaplan_meier", "x125_cuped", "x126_dp_counts",
-      "x127_pca_power", "x128_negative_samples", "x129_ks_test",
-      "x130_binary_hamming_ann", "x131_zonemap_prune", "x132_mv_incremental",
-      "x133_ab_welch_srm", "x134_acf_daily", "x135_mann_whitney",
-      "x136_dow_seasonality", "x137_bootstrap_ci", "x138_pareto_frontier",
-      "x139_khop_reach", "x140_kcore", "x141_ndcg_eval",
-      "x142_bucketed_join", "x143_changepoint", "x144_benford",
-      "x145_attribution", "x146_mase_forecast", "x147_gini_revenue",
-      "x148_ab_power", "x149_target_encoding", "x150_stump_train",
-      "x151_feature_mi", "x152_join_cardinality", "x153_schema_evolution",
-      "x154_partition_pruning", "x155_random_walks", "x156_pinball_quantiles",
-      "x157_anova", "x158_cramers_v", "x159_prefixspan",
-      "x160_textrank_keywords", "x161_fd_discovery", "x162_assoc_rules",
-      "x163_rolling_wau", "x164_merge_upsert", "x165_calibration_ece",
-      "x166_spearman_rank", "x167_curation_pipeline", "x168_roc_auc",
-      "x169_hll_rolling_wau", "x170_hashmin_cc", "x171_burstiness",
-      "x172_eb_shrinkage", "x173_good_turing", "x174_zipf_fit",
-      "x175_decayed_popularity", "x176_knn_shapley", "x177_mann_kendall",
-      "x178_rake_keywords", "x179_mad_outliers", "x180_hits",
-      "x181_consistent_hashing", "x182_ipw_ate", "x183_degree_mixing",
-      "x184_geometric_median", "x185_mcnemar", "x186_hill_tail",
-      "x187_lsh_planner", "x188_average_precision", "x189_hurst",
-      "x190_feature_hashing", "x191_energy_distance",
-      "x192_dedup_recall_eval", "x193_shuffle_mixing", "x194_ccf",
-      "x195_bh_fdr", "x196_cmh", "x197_sprt", "x198_l_diversity",
-      "x199_conductance", "x200_facility_location",
-      "x201_allpairs_prefix", "x202_logrank", "x203_isotonic",
-      "x204_kruskal_wallis", "x205_kmv_distinct", "x206_link_prediction",
-      "x207_brier_decomposition", "x208_rfm_segments", "x209_brown_forsythe",
-      "x210_qlm_retrieval", "x211_cox_ph", "x212_bradley_terry",
-      "x213_diff_in_diff", "x214_conformal", "x215_silhouette",
-      "x216_poisson_bootstrap", "x217_grid_dbscan", "x218_kneser_ney",
-      "x219_js_divergence", "x220_tukey_hsd", "x221_weighted_reservoir",
-      "x222_heaps_law", "x223_modularity", "x224_seasonal_strength",
-      "x225_ess_weights", "x226_neyman_allocation", "x227_cusum",
-      "x228_wasserstein", "x229_ols_multi", "x230_self_bleu",
-      "x231_theil_sen", "x232_matching_att", "x233_rmst",
-      "x234_fairness_audit", "x235_chao_richness", "x236_ewma_chart",
-      "x237_jackknife", "x238_icws_weighted_minhash",
-      "x239_markov_attribution", "x240_kendall_tau",
-      "x241_llr_keyness", "x242_smd_balance", "x243_burrows_delta",
-      "x244_cochran_armitage", "x245_chapman_capture", "x246_gain_lift",
-      "x247_trimmed_mean", "x248_friedman", "x249_readability",
-      "x250_shapley_attribution", "x251_qte", "x252_ljung_box",
-      "x253_effect_sizes", "x254_yule_k", "x255_qini_uplift",
-      "x256_t_closeness", "x257_kmv_set_ops",
-      "x258_edit_distance_dedup", "x259_cronbach_alpha",
-      "x260_strat_ate", "x261_overdispersion",
-      "x262_theil_decomposition", "x263_harmonic_centrality",
-      "x264_entropy_rate", "x265_group_sequential", "x266_rbo",
-      "x267_mcc_panel", "x268_langid_eval", "x269_permutation_test",
-      "x270_bcubed_eval", "x271_pacf", "x272_mrr",
-      "x273_jarque_bera", "x274_term_burstiness", "x275_cochran_q",
-      "x276_hubness", "x277_anisotropy", "x278_rich_club",
-      "x279_fightin_words", "x280_youden_j", "x281_lorenz_curve",
-      "x282_durbin_watson", "x283_haar_energy", "x284_auc_ci",
-      "x285_lognormal_gaps", "x286_risk_panel",
-      "x287_univariate_screen", "x288_page_trend", "x289_delong",
-      "x290_ktruss", "x291_weibull_fit", "x292_circular_stats",
-      "x293_binary_segmentation", "x294_session_sensitivity",
-      "x295_horvitz_thompson", "x296_two_way_anova",
-      "x297_collinearity_audit", "x298_gap_model_selection",
-      "x299_cooks_distance", "x300_trending_items",
-      "x301_bland_altman", "x302_hill_numbers",
-      "x303_gumbel_maxima", "x304_permanova")
-    val byName = SparkEntry.queries
+    require(args.length >= 2, "usage: graft.Explain <sfDir> <outFile> [name,...]")
+    val Array(sfDir, outFile) = args.take(2)
+    val names = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    val spark = LocalSession(defaultCpus = 32)
     val pw = new PrintWriter(new File(outFile))
-    interesting.foreach { name =>
+    try names.foreach { name =>
       pw.println(s"\n=== $name ===")
-      val plan = byName(name)(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      pw.println(plan)
-    }
-    pw.close()
+      pw.println(SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(FormattedMode))
+    } finally pw.close()
     println(s"plans written to $outFile")
     spark.stop()
   }

@@ -211,21 +211,6 @@ object Pipeline {
     case _ => "." // plain id — reference bug (falls into branch 7) fixed
   }
 
-  /** PNG directory sink (S4): one {id}.png per image, written task-parallel
-    * via foreachPartition — the reference's per-image `imsave` calls
-    * (generate_images_from_dicom.py:80,301,...) without the single-thread
-    * bottleneck. At cluster scale the same writer targets a shared store. */
-  def writePngs(ds: Dataset[ImageEx], dir: String): Unit = {
-    new java.io.File(dir).mkdirs()
-    ds.foreachPartition { (it: Iterator[ImageEx]) =>
-      it.foreach { ex =>
-        val bytes = pngBytes(ex.pixels, ex.width, ex.height)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, s"${ex.id}.png"), bytes)
-      }
-    }
-  }
-
   /** One encoded example: the annotation fields the JSON sinks need plus
     * the serialized tf.Example — what [[runEndToEnd]] caches instead of
     * the raw frame. */
@@ -327,7 +312,8 @@ object Pipeline {
     * The augmented train set is encoded once into a cached
     * [[EncodedExample]] set (one count fills it); both train JSON sinks
     * and the train shards read that cache. The train sinks and the
-    * validation chain then run side by side. */
+    * validation chain then run side by side. Both cached sets (the
+    * annotated frames and the encoded train set) are released on return. */
   def runEndToEnd(spark: SparkSession, images: Dataset[(String, Array[Short], Int, Int)],
       labels: DataFrame, outDir: String,
       trainShards: Int = 256, valShards: Int = 32): (Long, Long, Long) = {
@@ -338,27 +324,32 @@ object Pipeline {
     val skipped = spark.sparkContext.longAccumulator("annotations_skipped")
     val encodedTrain =
       encodeExamples(ops.Augment.allPasses(train), sources.LabelMap.rsnaIndex, skipped).cache()
-    val nTrain = encodedTrain.count()
 
     def writeJson(frames: (DataFrame, DataFrame), objDir: String, capDir: String): Unit = {
       frames._1.coalesce(1).write.mode("overwrite").json(s"$outDir/$objDir")
       frames._2.coalesce(1).write.mode("overwrite").json(s"$outDir/$capDir")
     }
-    Par.par2 {
-      writeJson(annotationFrames(spark, encodedTrain), "object_annotation", "caption_annotation")
-      TFRecordSink.write(records(encodedTrain), s"$outDir/tfrecords", "train", trainShards)
-    } {
-      // validation annotation sinks (generate_images_from_dicom.py:92-99)
-      writeJson(annotationFrames(spark, valid),
-        "validation_object_annotation", "validation_caption_annotation")
-      // stage 2 consumes the validation annotation FILES (S6), not the
-      // in-memory rows — proving the JSON sinks round-trip
-      val valFromFiles = readAnnotations(spark,
-        s"$outDir/validation_object_annotation",
-        s"$outDir/validation_caption_annotation", valid)
-      TFRecordSink.write(assembleExamples(valFromFiles, sources.LabelMap.rsnaIndex, skipped),
-        s"$outDir/tfrecords", "val", valShards)
+    try {
+      val nTrain = encodedTrain.count()
+      Par.par2 {
+        writeJson(annotationFrames(spark, encodedTrain), "object_annotation", "caption_annotation")
+        TFRecordSink.write(records(encodedTrain), s"$outDir/tfrecords", "train", trainShards)
+      } {
+        // validation annotation sinks (generate_images_from_dicom.py:92-99)
+        writeJson(annotationFrames(spark, valid),
+          "validation_object_annotation", "validation_caption_annotation")
+        // stage 2 consumes the validation annotation FILES (S6), not the
+        // in-memory rows — proving the JSON sinks round-trip
+        val valFromFiles = readAnnotations(spark,
+          s"$outDir/validation_object_annotation",
+          s"$outDir/validation_caption_annotation", valid)
+        TFRecordSink.write(assembleExamples(valFromFiles, sources.LabelMap.rsnaIndex, skipped),
+          s"$outDir/tfrecords", "val", valShards)
+      }
+      (nTrain, valid.count(), skipped.value)
+    } finally {
+      encodedTrain.unpersist()
+      annotated.unpersist()
     }
-    (nTrain, valid.count(), skipped.value)
   }
 }

@@ -51,8 +51,10 @@ final class LongVectorSumAggregator(dim: Int)
   override def zero: Array[Long] = new Array[Long](dim)
 
   override def reduce(b: Array[Long], v: Seq[Long]): Array[Long] = {
+    require(v.length == dim, s"vector has ${v.length} dimensions, " +
+      s"expected $dim (the centroid dimension)")
     var i = 0
-    while (i < dim && i < v.length) { b(i) += v(i); i += 1 }
+    while (i < dim) { b(i) += v(i); i += 1 }
     b
   }
 

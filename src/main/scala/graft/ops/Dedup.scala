@@ -332,11 +332,23 @@ object Dedup {
   private[ops] def cappedBandSelfJoin(bandsDf: DataFrame, idCol: String,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val b = capBuckets(bandsDf, maxBucket)
-    b.as("a")
+    bandJoin(b, b, idCol)(_ < _, Seq(_, _))
+  }
+
+  /** Candidate pairs of two band tables (or one table with itself): a row
+    * of `a` and a row of `b` sharing a (band, bucket) whose ids pass
+    * `keep`, named (doc_a, doc_b) by `pair`, deduplicated. Both functions
+    * take the a-side id first. */
+  private def bandJoin(a: DataFrame, b: DataFrame, idCol: String)(
+      keep: (Column, Column) => Column,
+      pair: (Column, Column) => Seq[Column]): DataFrame = {
+    val (idA, idB) = (col(s"a.$idCol"), col(s"b.$idCol"))
+    val Seq(docA, docB) = pair(idA, idB)
+    a.as("a")
       .join(b.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"))
+          keep(idA, idB))
+      .select(docA.as("doc_a"), docB.as("doc_b"))
       .distinct()
   }
 
@@ -352,11 +364,8 @@ object Dedup {
   def minhashNearDupsAgainst(
       batch: DataFrame, index: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8): DataFrame = {
-    val cand = minhashBands(batch, idCol, textCol).as("a")
-      .join(minhashBands(index, idCol, textCol).as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"))
-      .distinct()
+    val cand = bandJoin(minhashBands(batch, idCol, textCol),
+      minhashBands(index, idCol, textCol), idCol)((_, _) => lit(true), Seq(_, _))
     // Union only the (id, text) projection: batch and index may carry
     // different payload columns, and none of them belong in the verify join.
     val texts = batch.select(col(idCol), col(textCol))
@@ -382,14 +391,8 @@ object Dedup {
     val extraBands = minhashBands(extra, idCol, textCol)
     val allBands = baseBands.select(col(idCol), col("band"), col("bucket"))
       .unionByName(extraBands)
-    val cand = extraBands.as("a")
-      .join(allBands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col(s"a.$idCol") =!= col(s"b.$idCol"))
-      .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("doc_a"),
-        greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("doc_b"))
-      .distinct()
+    val cand = bandJoin(extraBands, allBands, idCol)(_ =!= _,
+      (x, y) => Seq(least(x, y), greatest(x, y)))
     val texts = base.select(col(idCol), col(textCol))
       .unionByName(extra.select(col(idCol), col(textCol)))
     verifyWithStringJaccard(cand, texts, idCol, textCol, threshold)

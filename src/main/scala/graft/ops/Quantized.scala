@@ -73,16 +73,6 @@ object Quantized {
     proj
   }
 
-  /** Exact integer squared distance Σ (a_i − b_i)². */
-  private def d2(a: Seq[Long], b: Array[Long]): Long = {
-    var s = 0L
-    var i = 0
-    while (i < a.length && i < b.length) {
-      val d = a(i) - b(i); s += d * d; i += 1
-    }
-    s
-  }
-
   /** Centroids as exact rationals in struct-of-arrays layout: `sums` is
     * k·dim Longs (centroid c occupies [c·dim, (c+1)·dim)), `ns` the k
     * member counts. Flat primitive arrays keep the argmin inner loop
@@ -91,6 +81,20 @@ object Quantized {
     * on the 20k-vector probe corpus). */
   private final case class FlatCentroids(sums: Array[Long], ns: Array[Long], dim: Int) {
     def k: Int = ns.length
+  }
+
+  /** Exact scaled squared distance Σ (a_i·n − s_i)² from `a` to the
+    * centroid whose `dim` member sums start at `sums(off)` and whose member
+    * count is `n` — the one L2 kernel of the k-means assignment and the
+    * outlier ranking. */
+  private def scaledSqL2(a: Array[Long], sums: Array[Long], off: Int, dim: Int,
+      n: Long): Long = {
+    require(a.length == dim, s"vector has ${a.length} dimensions, " +
+      s"expected $dim (the centroid dimension)")
+    var acc = 0L
+    var i = 0
+    while (i < dim) { val d = a(i) * n - sums(off + i); acc += d * d; i += 1 }
+    acc
   }
 
   /** Argmin cluster of `a` against centroids held as exact rationals
@@ -103,13 +107,8 @@ object Quantized {
     var c = 0
     while (c < fc.k) {
       val n = fc.ns(c)
-      val off = c * fc.dim
-      var acc = 0L
-      var i = 0
-      while (i < fc.dim && i < a.length) {
-        val d = a(i) * n - fc.sums(off + i); acc += d * d; i += 1
-      }
-      val dist = acc.toDouble / (n.toDouble * n.toDouble)
+      val dist = scaledSqL2(a, fc.sums, c * fc.dim, fc.dim, n).toDouble /
+        (n.toDouble * n.toDouble)
       if (dist < bestD) { bestD = dist; best = c }
       c += 1
     }
@@ -206,14 +205,7 @@ object Quantized {
     val sumVec = udaf(agg)
     val cent = q.agg(sumVec(col("q")).as("sums"), count(lit(1)).as("n"))
     val d2nUdf = udf { (v: Seq[Long], s: Seq[Long], n: Long) =>
-      val a = v.toArray
-      val b = s.toArray
-      var acc = 0L
-      var i = 0
-      while (i < a.length && i < b.length) {
-        val d = a(i) * n - b(i); acc += d * d; i += 1
-      }
-      acc
+      scaledSqL2(v.toArray, s.toArray, 0, dim, n)
     }
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("d2n").desc, col("id"))

@@ -1,6 +1,9 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -46,33 +49,44 @@ object DedupStream {
     * Pairs and novel rows are materialized (localCheckpoint) BEFORE either
     * append lands: both plans read the index directory the novel-append
     * writes to, and a lazy plan executed after the append would see its
-    * own output. */
+    * own output. The three checkpoints are released once both appends
+    * land (or the step fails). */
   def ingestBatch(batch: DataFrame, idCol: String, textCol: String,
       indexDir: String, pairsDir: String, batchId: Long,
       threshold: Double = 0.8): Unit = {
     val spark = batch.sparkSession
-    val docs = batch.select(col(idCol), col(textCol)).localCheckpoint()
-    val internal = Dedup.minhashNearDups(docs, idCol, textCol,
-        threshold = threshold)
-      .withColumn("kind", lit("batch"))
-    val survivors = docs.join(
-      internal.select(col("doc_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val idxFs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index = if (idxFs.exists(idxPath)) spark.read.parquet(indexDir)
-    else docs.limit(0) // first batch: nothing admitted yet
-    val against = Dedup.minhashNearDupsAgainst(survivors, index,
-        idCol, textCol, threshold = threshold)
-      .withColumn("kind", lit("index"))
-    val pairs = internal.unionByName(against)
-      .withColumn("batch_id", lit(batchId)).localCheckpoint()
-    val novel = survivors.join(
-        pairs.filter(col("kind") === "index")
-          .select(col("doc_a").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-      .withColumn("batch_id", lit(batchId)).localCheckpoint()
-    pairs.write.mode("append").parquet(pairsDir)
-    novel.write.mode("append").parquet(indexDir)
+    val pinned = mutable.Buffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { val c = df.localCheckpoint(); pinned += c; c }
+    try {
+      val docs = pin(batch.select(col(idCol), col(textCol)))
+      val internal = Dedup.minhashNearDups(docs, idCol, textCol,
+          threshold = threshold)
+        .withColumn("kind", lit("batch"))
+      val survivors = docs.join(
+        internal.select(col("doc_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
+      val idxPath = new org.apache.hadoop.fs.Path(indexDir)
+      val idxFs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val index = if (idxFs.exists(idxPath)) spark.read.parquet(indexDir)
+      else docs.limit(0) // first batch: nothing admitted yet
+      val against = Dedup.minhashNearDupsAgainst(survivors, index,
+          idCol, textCol, threshold = threshold)
+        .withColumn("kind", lit("index"))
+      val pairs = pin(internal.unionByName(against)
+        .withColumn("batch_id", lit(batchId)))
+      val novel = pin(survivors.join(
+          pairs.filter(col("kind") === "index")
+            .select(col("doc_a").as(idCol)).distinct(),
+          Seq(idCol), "left_anti")
+        .withColumn("batch_id", lit(batchId)))
+      pairs.write.mode("append").parquet(pairsDir)
+      novel.write.mode("append").parquet(indexDir)
+    } finally pinned.foreach(release)
+  }
+
+  /** Drops the blocks behind a localCheckpoint'd frame. */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical.foreach {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** The streaming wiring: every micro-batch of `docs` flows through

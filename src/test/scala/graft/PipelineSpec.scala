@@ -150,6 +150,15 @@ class PipelineSpec extends SparkSpec {
     assert(resA._3 === dropped)
   }
 
+  test("end-to-end: releases its caches; no persistent RDD outlives the run") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val out = java.nio.file.Files.createTempDirectory("graft_e2e_cache").toString
+    Pipeline.runEndToEnd(spark, fixtureImages, fixtureLabels, out,
+      trainShards = 4, valShards = 2)
+    assert((persisted -- before).isEmpty)
+  }
+
   test("end-to-end: counts, annotations, shards, example schema") {
     val out = java.nio.file.Files.createTempDirectory("graft_e2e").toString
     val (nTrainAug, nVal, skipped) = Pipeline.runEndToEnd(

@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import graft.{SparkSpec, Tables}
+import graft.{Pipeline, SparkSpec, Tables}
+import graft.ops.Augment.ImageEx
 
 /** The approximate/sketch surface for the 100 TB path: exact distinct counts
   * and exact percentiles don't scale to petabytes; these assert the approx
@@ -34,12 +36,24 @@ class ApproxSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_png").toString
     val imgs = Augment.syntheticImages(spark, Tables.part(spark, sfDir),
       size = 16, maxImages = 3)
-    graft.Pipeline.writePngs(imgs, dir)
+    writePngs(imgs, dir)
     val files = new java.io.File(dir).listFiles()
     assert(files.length === imgs.count())
     assert(files.forall(_.getName.endsWith(".png")))
     // each decodes as a real 16x16 PNG
     val img = javax.imageio.ImageIO.read(files.head)
     assert(img.getWidth === 16 && img.getHeight === 16)
+  }
+
+  /** PNG directory sink: one {id}.png per image, written task-parallel
+    * via foreachPartition. */
+  private def writePngs(ds: Dataset[ImageEx], dir: String): Unit = {
+    new java.io.File(dir).mkdirs()
+    ds.foreachPartition { (it: Iterator[ImageEx]) =>
+      it.foreach { ex =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"${ex.id}.png"),
+          Pipeline.pngBytes(ex.pixels, ex.width, ex.height))
+      }
+    }
   }
 }

@@ -117,4 +117,22 @@ class QuantizedSpec extends SparkSpec {
       .orderBy("cluster", "pos").collect().toSeq
     assert(a === b)
   }
+
+  test("a vector of the wrong dimension fails k-means and outliers with a clear message") {
+    // seven 64-dimensional rows and one 63-dimensional row (id 7)
+    val mixed = (0L until 8L).map { id =>
+      (id, Seq.tabulate(if (id == 7L) 63 else 64)(i => ((id * 7 + i) % 11) / 10.0f))
+    }.toDF("vec_id", "embedding")
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val kmeansErr = intercept[Exception] {
+      Quantized.lloydKmeansFixedK(mixed, "vec_id", "embedding", k = 2,
+        salt = "spec-salt:").collect()
+    }
+    assert(messages(kmeansErr).contains("vector has 63 dimensions, expected 64"))
+    val outlierErr = intercept[Exception] {
+      Quantized.centroidOutliers(mixed, "vec_id", "embedding", topN = 3).collect()
+    }
+    assert(messages(outlierErr).contains("vector has 63 dimensions, expected 64"))
+  }
 }

@@ -89,4 +89,20 @@ class DedupStreamSpec extends SparkSpec {
     val droppedInternally = p1.collect { case (_, b, "batch") => b }.toSet
     assert((hit ++ droppedInternally) === docs.map(_._1).toSet)
   }
+
+  test("ingestBatch releases its checkpoints: no persistent RDD outlives a step") {
+    val docs = graft.Tables.documents(spark, sfDir)
+      .select($"doc_id", $"text").orderBy("doc_id").limit(40)
+      .as[(Long, String)].collect().toSeq
+    val (idx, prs) = (tmp("dedup_l_idx"), tmp("dedup_l_pairs"))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    // the first step builds the index, the second bands against it
+    DedupStream.ingestBatch(docs.toDF("doc_id", "text"), "doc_id", "text",
+      s"$idx/t", s"$prs/t", batchId = 0L)
+    assert((persisted -- before).isEmpty)
+    DedupStream.ingestBatch(docs.toDF("doc_id", "text"), "doc_id", "text",
+      s"$idx/t", s"$prs/t", batchId = 1L)
+    assert((persisted -- before).isEmpty)
+  }
 }
