@@ -47,23 +47,36 @@ object Pipeline {
     StructField("height", DoubleType),
     StructField("Target", IntegerType)))
 
+  /** The labels CSV; a row that does not parse against [[labelsSchema]]
+    * fails the read (the reference's `int(...)` casts raise). */
   def readLabels(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").schema(labelsSchema).csv(path)
+    spark.read.option("header", "true").option("mode", "FAILFAST")
+      .schema(labelsSchema).csv(path)
 
   /** create_maps (:15-41) as one aggregation: boxes only from Target=1 rows
     * (P1), int(float(x)) coercion (P2), last-wins caption (A2 — constant per
-    * patient so order-insensitive). */
-  def createMaps(labels: DataFrame): DataFrame =
+    * patient so order-insensitive). A row whose Target is not 0 or 1, or a
+    * Target=1 row missing a coordinate, fails the aggregation with a
+    * message naming the labels file and the patientId. */
+  def createMaps(labels: DataFrame): DataFrame = {
+    val coords = Seq("x", "y", "width", "height").map(col)
+    def reject(why: String) = raise_error(concat(lit("bad label row in "),
+      coalesce(nullif(input_file_name(), lit("")), lit("the labels table")),
+      lit(": patientId "), coalesce(col("patientId"), lit("null")), lit(s": $why")))
     labels
       .withColumn("box",
-        when(col("Target") === 1,
-          struct(
-            col("x").cast("int").as("x"), col("y").cast("int").as("y"),
-            col("width").cast("int").as("w"), col("height").cast("int").as("h"))))
+        when(col("Target").isNull || !col("Target").isin(0, 1), reject("Target is not 0 or 1"))
+          .when(col("Target") === 1 && coords.map(_.isNull).reduce(_ || _),
+            reject("a Target=1 row needs x, y, width and height"))
+          .when(col("Target") === 1,
+            struct(
+              col("x").cast("int").as("x"), col("y").cast("int").as("y"),
+              col("width").cast("int").as("w"), col("height").cast("int").as("h"))))
       .groupBy(col("patientId"))
       .agg(
         sort_array(collect_list(col("box"))).as("boxes"),
         last(col("Target")).cast("string").as("target"))
+  }
 
   /** Attach boxes + target to images: J1 (left, missing ⇒ empty list) and
     * J2 (caption) in one broadcast join. */

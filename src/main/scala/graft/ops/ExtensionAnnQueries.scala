@@ -674,6 +674,8 @@ object ExtensionAnnQueries {
     // and every later batch searches slim code rows without re-encoding.
     // Oracle = x68's SQL verbatim: the round-trip must reproduce the
     // rebuild-every-time result bit-for-bit or persistence lost something.
+    // The index search runs when called and returns local rows, so the
+    // handle's cached layout is released before the plan is returned.
     QuerySpec(
       "x70_ivfpq_index_roundtrip",
       (s, dir) => {
@@ -685,10 +687,10 @@ object ExtensionAnnQueries {
         IvfPqIndex.build(e, "vec_id", "embedding",
             seedIds = (0L to 7L), m = 8, codebook)
           .save(idxDir)
-        IvfPqIndex.load(s, idxDir)
-          .refineTopK(e.filter(col("vec_id") < 5), e, "vec_id", "embedding",
-            k = 10, nProbe = 4, refine = 100)
-          .orderBy("qid", "rn")
+        val idx = IvfPqIndex.load(s, idxDir)
+        try idx.refineTopK(e.filter(col("vec_id") < 5), e, "vec_id", "embedding",
+            k = 10, nProbe = 4, refine = 100).orderBy("qid", "rn")
+        finally idx.release()
       },
       Some("""WITH e AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings),
              |n AS (SELECT vec_id, emb, sqrt(list_sum([x * x for x in emb])) AS nrm FROM e),
@@ -805,10 +807,10 @@ object ExtensionAnnQueries {
           seedIds = (0L to 7L), m = 8, codebookSeedIds = (0L to 15L),
           maxShare = 0.25)
         require(v.contains(2), s"health trigger must fire on a 2-cell index, got $v")
-        IvfPqIndex.loadCurrent(s, root)
-          .refineTopK(e.filter(col("vec_id") < 5), e, "vec_id", "embedding",
-            k = 10, nProbe = 4, refine = 100)
-          .orderBy("qid", "rn")
+        val idx = IvfPqIndex.loadCurrent(s, root)
+        try idx.refineTopK(e.filter(col("vec_id") < 5), e, "vec_id", "embedding",
+            k = 10, nProbe = 4, refine = 100).orderBy("qid", "rn")
+        finally idx.release()
       },
       Some("""WITH e AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings),
              |n AS (SELECT vec_id, emb, sqrt(list_sum([x * x for x in emb])) AS nrm FROM e),

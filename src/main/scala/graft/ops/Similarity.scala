@@ -307,11 +307,13 @@ object Similarity {
 
   /** The `nProbe` nearest cells of a query, nearest first, ties to the
     * lower cell. */
+  private[ops] def probedCells(v: Seq[Float], cents: Array[Array[Double]],
+      nProbe: Int): Array[Int] =
+    centroidDists(v, cents).zipWithIndex.sortBy(x => (x._1, x._2))
+      .take(nProbe).map(_._2)
+
   private def probeUdf(bc: Broadcast[Array[Array[Double]]], nProbe: Int) =
-    udf { v: Seq[Float] =>
-      centroidDists(v, bc.value).zipWithIndex.sortBy(x => (x._1, x._2))
-        .take(nProbe).map(_._2)
-    }
+    udf { v: Seq[Float] => probedCells(v, bc.value, nProbe) }
 
   /** Cell assignment with its squared distance in integer micro-units —
     * [[cellAssignUdf]]'s row type. Micros, not a rounded double: summing
@@ -400,14 +402,15 @@ object Similarity {
         :+ round(col("pq.mse_e6"), 4).as("mse_e6"): _*)
   }
 
-  /** Per-query ADC lookup table over a broadcast codebook: entry
-    * (s, c) = ||q[s·dsub,(s+1)·dsub) − cent_c[same)||², rounded to 6
-    * decimals so downstream ADC sums are exact integer-micro sums on both
-    * the engine and the oracle (the x40/x44 DECIMAL(18,6) device). */
+  /** Per-query ADC lookup table: entry (s, c) at s·|cb| + c is
+    * ||q[s·dsub,(s+1)·dsub) − cent_c[same)||², rounded to 6 decimals so
+    * downstream ADC sums are exact integer-micro sums on both the engine
+    * and the oracle (the x40/x44 DECIMAL(18,6) device). */
+  private[ops] def pqLut(v: Seq[Float], cb: Array[Array[Double]], m: Int): Array[Double] =
+    pqSubspaceDists(v, cb, m).map(d => math.floor(d * 1e6 + 0.5) / 1e6)
+
   private def pqLutUdf(m: Int, bc: Broadcast[Array[Array[Double]]]) =
-    udf { v: Seq[Float] =>
-      pqSubspaceDists(v, bc.value, m).map(d => math.floor(d * 1e6 + 0.5) / 1e6)
-    }
+    udf { v: Seq[Float] => pqLut(v, bc.value, m) }
 
   /** Squared L2 distance from each of `v`'s `m` contiguous subvectors to
     * the same slice of every codebook centroid — the shared kernel of
@@ -514,10 +517,14 @@ object Similarity {
       .select(col(idCol).as("cid"), col("cell"), col("codes"))
   }
 
-  /** The SERVE half of IVF-PQ: ADC top-k over an ALREADY-CODED corpus
-    * table — what runs against a loaded index, where the scan reads only
-    * (cid, cell, codes) and the full embedding column never appears. */
-  private[ops] def ivfPqSearchCoded(queries: DataFrame, idCol: String,
+  /** The search half of [[ivfPqTopK]] as one plan: queries explode to
+    * their probed cells, equi-join the coded table on `cell`, score by ADC
+    * over the dash-separated code strings and keep k rows per `qid` with
+    * a `row_number` window. It serves the one-shot build-and-search, whose
+    * query side is a whole table; a persisted index searches through
+    * [[IvfPqIndex.topK]]'s cell layout instead, and this plan is that
+    * path's test oracle. */
+  private def ivfPqSearchCoded(queries: DataFrame, idCol: String,
       embCol: String, coded: DataFrame, centroids: Array[Array[Double]],
       m: Int, codebook: Array[Array[Double]], k: Int, nProbe: Int): DataFrame = {
     val spark = coded.sparkSession

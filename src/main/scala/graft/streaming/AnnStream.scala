@@ -10,9 +10,9 @@ import graft.ops.{IvfPqIndex, Similarity}
   * x70 build/serve split (FAISS's `add` on a trained index; Jégou et al.
   * 2011's structures are append-only once the quantizers are frozen).
   *
-  * Each micro-batch loads the index's small tables (centroids/codebook/
-  * meta — k-sized driver state), encodes the batch with the FROZEN
-  * quantizers (row-local kernels, no shuffle), and appends the slim
+  * Each micro-batch reads the index's small tables (centroids/codebook/
+  * meta — k-sized driver state; never `codes`), encodes the batch with
+  * the FROZEN quantizers (row-local kernels, no shuffle), and appends the slim
   * (cid, cell, codes) rows to the codes table. Because encoding is a pure
   * per-row function of the frozen quantizers, ingest-then-search equals
   * build-from-scratch-then-search exactly (AnnStreamSpec proves it) —
@@ -25,9 +25,8 @@ object AnnStream {
   /** One ingest step, shared by the streaming sink and its batch twin. */
   def ingestBatch(batch: DataFrame, idCol: String, embCol: String,
       indexDir: String): Unit = {
-    val idx = IvfPqIndex.load(batch.sparkSession, indexDir)
-    Similarity.ivfPqEncodeCells(batch, idCol, embCol, idx.centroids,
-        idx.m, idx.codebook)
+    val (centroids, m, codebook) = IvfPqIndex.readQuantizers(batch.sparkSession, indexDir)
+    Similarity.ivfPqEncodeCells(batch, idCol, embCol, centroids, m, codebook)
       .write.mode("append").parquet(s"$indexDir/codes")
   }
 

@@ -39,6 +39,23 @@ class PipelineSpec extends SparkSpec {
     assert(p3box.getInt(0) === 4 && p3box.getInt(1) === 6)
   }
 
+  test("labels: a bad Target or a positive row missing a coordinate fails, naming file and patient") {
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    Seq("p101,2,3,8,9,yes" -> "p101", "p102,,3,8,9,1" -> "p102", "p103,2,3,8,9,2" -> "p103")
+      .foreach { case (bad, pid) =>
+        val dir = java.nio.file.Files.createTempDirectory("labels_bad")
+        val csv = dir.resolve("stage_1_train_labels.csv")
+        java.nio.file.Files.writeString(csv,
+          s"patientId,x,y,width,height,Target\np100,,,,,0\n$bad\np104,1,2,3,4,1\n")
+        val err = intercept[Exception] {
+          Pipeline.createMaps(Pipeline.readLabels(spark, csv.toString)).collect()
+        }
+        assert(messages(err).contains(csv.toString) && messages(err).contains(pid),
+          messages(err))
+      }
+  }
+
   test("default split plan is window-free; split8020 keeps exact counts") {
     val annotated = Pipeline.annotate(
       spark, fixtureImages, Pipeline.createMaps(fixtureLabels))

@@ -207,23 +207,130 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("brute-force and index top-k cuts plan a per-partition k-heap (Partial WindowGroupLimit)") {
+    import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
     val e = graft.Tables.embeddings(spark, sfDir)
     val q = e.filter($"vec_id" < 5)
+    // brute force: the window's Partial mode keeps a k-heap below the shuffle
+    val brute = Similarity.cosineTopK(q, e, "vec_id", "embedding", k = 10)
+    assert(brute.count() === 50L)
+    val modes = new AdaptiveSparkPlanHelper {}.collect(brute.queryExecution.executedPlan) {
+      case w: WindowGroupLimitExec => w.mode.toString
+    }
+    assert(modes.exists(_.contains("Partial")),
+      s"cosineTopK has no Partial-mode WindowGroupLimit below its shuffle: $modes")
+
+    // the index: one job over the probed cells' partitions, no shuffle, a
+    // k-heap per query per task. The queries are a local frame, so
+    // collecting them runs no job.
     val idx = IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
       Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L)))
-    val plans = new AdaptiveSparkPlanHelper {}
-    Seq("cosineTopK" -> Similarity.cosineTopK(q, e, "vec_id", "embedding", k = 10),
-        "IvfPqIndex.topK" -> idx.topK(q, "vec_id", "embedding", k = 10, nProbe = 3))
-      .foreach { case (name, df) =>
-        assert(df.count() === 50L, name)
-        val modes = plans.collect(df.queryExecution.executedPlan) {
-          case w: WindowGroupLimitExec => w.mode.toString
+    val (k, nProbe) = (10, 3)
+    val local = spark.createDataFrame(java.util.List.of(q.collect(): _*), q.schema)
+    val qs = local.collect().map(r => idx.query(r.getLong(0), r.getSeq[Float](1), nProbe))
+    val partitioner = idx.layout.partitioner.get
+    val probedParts = qs.flatMap(_.cells).map(partitioner.getPartition).distinct
+    idx.layout.collect().foreach { block =>
+      block.topK(qs, idx.codebook.length, idx.m, k).foreach(hits => assert(hits.length <= k))
+    }
+    val group = "ivfpq-topk-shape"
+    val jobs, stages, tasks, shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val groupJobs, groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (ours(j.properties)) { jobs.incrementAndGet(); groupJobs.add(j.jobId) }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (ours(s.properties)) { stages.incrementAndGet(); groupStages.add(s.stageInfo.stageId) }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (groupStages.contains(t.stageId)) {
+          tasks.incrementAndGet()
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleReadMetrics.totalBytesRead +
+            t.taskMetrics.shuffleWriteMetrics.bytesWritten)
         }
-        assert(modes.exists(_.contains("Partial")),
-          s"$name has no Partial-mode WindowGroupLimit below its shuffle: $modes")
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (groupJobs.contains(j.jobId)) ended.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = try {
+      spark.sparkContext.setJobGroup(group, group)
+      try idx.topK(local, "vec_id", "embedding", k, nProbe)
+      finally spark.sparkContext.clearJobGroup()
+    } finally {
+      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      spark.sparkContext.removeSparkListener(listener)
+      idx.release()
+    }
+    assert(out.count() === 50L)
+    assert(jobs.get === 1L, "jobs")
+    assert(stages.get === 1L, "stages run: the result stage only, no shuffle stage")
+    assert(shuffleBytes.get === 0L)
+    assert(tasks.get === probedParts.length.toLong, "one task per probed partition")
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("IvfPqIndex.topK == ivfPqTopK for every query, single and batched, at the edges") {
+    val sf = sfDir.stripSuffix("sf0.001") + "sf0.01" // the sf0.01 tables sit beside sf0.001
+    val e = graft.Tables.embeddings(spark, sf)
+    val codebook = Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_serve").toString
+    IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8, codebook).save(dir)
+    val idx = IvfPqIndex.load(spark, dir)
+    val all = e.select("vec_id", "embedding")
+    def oracle(q: org.apache.spark.sql.DataFrame, k: Int, nProbe: Int) =
+      Similarity.ivfPqTopK(q, e, "vec_id", "embedding", k, nProbe, (0L to 7L), 8, codebook)
+    def same(q: org.apache.spark.sql.DataFrame, k: Int, nProbe: Int): Unit = {
+      val (got, want) = (idx.topK(q, "vec_id", "embedding", k, nProbe), oracle(q, k, nProbe))
+      assert(got.schema === want.schema, s"k=$k nProbe=$nProbe")
+      assert(got.orderBy("qid", "rn").collect().toSeq ===
+        want.orderBy("qid", "rn").collect().toSeq, s"k=$k nProbe=$nProbe")
+    }
+    try {
+      same(all, 10, 3)                          // every query as one batch
+      same(all.filter($"vec_id" < 20), 600, 1)  // k above the candidate count
+      same(all.filter($"vec_id" < 20), 10, 8)   // nProbe = #cells
+      same(all.filter($"vec_id" < 20), 10, 20)  // nProbe > #cells
+      same(all.filter($"vec_id" < 0), 10, 3)    // an empty query frame
+      // an id absent from the index is not excluded: its own vector ranks first
+      same(all.filter($"vec_id" < 20).withColumn("vec_id", $"vec_id" + 100000L), 10, 3)
+      val batch = idx.topK(all, "vec_id", "embedding", 10, 3).collect()
+      assert(!batch.exists(r => r.getLong(0) == r.getLong(1)), "self-exclusion")
+      // every query as its own single-row frame
+      val want = oracle(all, 10, 3).collect().groupBy(_.getLong(0))
+      val rows = all.collect()
+      same(spark.createDataFrame(java.util.List.of(rows.head), all.schema), 10, 3)
+      rows.foreach { r =>
+        val one = spark.createDataFrame(java.util.List.of(r), all.schema)
+        assert(idx.topK(one, "vec_id", "embedding", 10, 3).collect().toSeq ===
+          want(r.getLong(0)).sortBy(_.getLong(3)).toSeq, s"query ${r.getLong(0)}")
       }
+    } finally idx.release()
+  }
+
+  test("a malformed code row fails the load, naming its cid and the codes directory") {
+    val e = graft.Tables.embeddings(spark, sfDir).filter($"vec_id" < 50)
+    val idx = IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L)))
+    val good = idx.codes.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Seq("3-x-1-1-1-1-1-1", "3-99-1-1-1-1-1-1", "3-1-1", "").foreach { bad =>
+      val dir = java.nio.file.Files.createTempDirectory("ivfpq_bad").toString
+      idx.save(dir)
+      (good :+ ((9001L, 0, bad))).toSeq.toDF("cid", "cell", "codes")
+        .write.mode("overwrite").parquet(s"$dir/codes")
+      val before = persisted
+      val err = intercept[Exception] {
+        IvfPqIndex.load(spark, dir).topK(e, "vec_id", "embedding", k = 10, nProbe = 3)
+      }
+      assert(messages(err).contains(s"malformed PQ code row cid=9001 in file:$dir/codes"),
+        messages(err))
+      assert((persisted -- before).isEmpty, "a failed load keeps no cached layout")
+    }
   }
 
   test("semDedup drops the higher id of in-cell near-dups, keeps the rest") {

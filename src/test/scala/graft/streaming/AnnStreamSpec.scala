@@ -128,4 +128,81 @@ class AnnStreamSpec extends SparkSpec {
     assert(v === None)
     assert(IvfPqIndex.currentVersion(root) === Some(1))
   }
+
+  private def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** An index over `vec_id < 300` saved under a fresh directory, and the
+    * rows it leaves out. */
+  private def baseIndex(name: String) = {
+    val e = graft.Tables.embeddings(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory(name).toString + "/idx"
+    IvfPqIndex.build(e.filter($"vec_id" < 300), "vec_id", "embedding", seedIds = (0L to 7L),
+      m = 8, Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))).save(dir)
+    (e, dir, e.filter($"vec_id" >= 300).select("vec_id", "embedding"))
+  }
+
+  test("release unpersists the serve layout: no persistent RDD outlives it") {
+    val (e, dir, _) = baseIndex("ann_release")
+    val queries = e.filter($"vec_id" < 5)
+    val before = persisted
+    val loaded = IvfPqIndex.load(spark, dir)
+    assert((persisted -- before).nonEmpty, "load lays the codes out")
+    val rows = loaded.topK(queries, "vec_id", "embedding", k = 10, nProbe = 3).collect()
+    loaded.release()
+    assert((persisted -- before).isEmpty)
+    // a built handle lays out on its first search and releases the same way
+    val built = loaded.copy(codes = loaded.codes.select("cid", "cell", "codes"))
+    assert(built.topK(queries, "vec_id", "embedding", k = 10, nProbe = 3).collect().toSeq
+      === rows.toSeq)
+    built.release()
+    assert((persisted -- before).isEmpty)
+  }
+
+  test("ingestBatch reads only the quantizers: it never opens codes or caches anything") {
+    val (_, dir, rest) = baseIndex("ann_ingest_reads")
+    val base = IvfPqIndex.load(spark, dir)
+    val n = base.codes.count()
+    base.release()
+    // park the code files and leave a file that no parquet reader accepts
+    val codes = java.nio.file.Paths.get(s"$dir/codes")
+    val aside = java.nio.file.Files.createTempDirectory("ann_codes_aside")
+    val files = java.nio.file.Files.list(codes).toArray.map(_.asInstanceOf[java.nio.file.Path])
+    files.foreach(f => java.nio.file.Files.move(f, aside.resolve(f.getFileName)))
+    val junk = codes.resolve("part-00000-junk.parquet")
+    java.nio.file.Files.writeString(junk, "not parquet")
+    val before = persisted
+    AnnStream.ingestBatch(rest, "vec_id", "embedding", dir)
+    assert((persisted -- before).isEmpty)
+    java.nio.file.Files.delete(junk)
+    files.foreach { f =>
+      val back = codes.resolve(f.getFileName)
+      if (!java.nio.file.Files.exists(back)) java.nio.file.Files.move(aside.resolve(f.getFileName), back)
+    }
+    val grown = IvfPqIndex.load(spark, dir)
+    assert(grown.codes.count() === n + rest.count())
+    grown.release()
+  }
+
+  test("a handle loaded before an ingest serves its snapshot; a reload sees the new rows") {
+    val (e, dir, rest) = baseIndex("ann_snapshot")
+    val queries = e.filter($"vec_id" < 5)
+    def search(idx: IvfPqIndex) =
+      idx.topK(queries, "vec_id", "embedding", k = 10, nProbe = 3).orderBy("qid", "rn")
+        .collect().toSeq
+    val old = IvfPqIndex.load(spark, dir)
+    val snapshot = search(old)
+    AnnStream.ingestBatch(rest, "vec_id", "embedding", dir)
+    assert(search(old) === snapshot)
+    old.release() // laid out again from the same listing
+    assert(search(old) === snapshot)
+    old.release()
+    val reloaded = IvfPqIndex.load(spark, dir)
+    val grown = search(reloaded)
+    reloaded.release()
+    val full = IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L)))
+    assert(grown === search(full))
+    full.release()
+    assert(grown.exists(_.getLong(1) >= 300L) && grown != snapshot)
+  }
 }
