@@ -6,10 +6,12 @@ import java.nio.charset.StandardCharsets.US_ASCII
 import java.util.HexFormat
 import java.util.zip.{CRC32, Deflater}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
 import graft.ops.Augment.ImageEx
@@ -26,15 +28,19 @@ import graft.sources.{TFRecordIO, TFRecordSink}
   *
   * Stage 2 (images_to_tfrecord.py:214-261): annotated images → per-box
   * validity filter + normalization → 16-feature tf.Example → sharded
-  * TFRecord sink (whose round-robin repartition is the second shuffle). The
-  * reference's schema-mismatch bugs (SURVEY §3.2) are resolved by
-  * construction: one explicit ImageEx schema end-to-end.
+  * TFRecord sink ([[TFRecordSink.write]]: record g to shard g mod N, one
+  * writer task per core). The reference's schema-mismatch bugs (SURVEY
+  * §3.2) are resolved by construction: one explicit ImageEx schema
+  * end-to-end.
   *
   * [[runEndToEnd]] encodes each augmented frame exactly once: it caches the
   * encoded examples (id, boxes, caption, record — a fraction of the raw
   * frames' size), not the frames, and feeds every train sink from that
-  * cache. The train and validation sink chains share no data, so they run
-  * side by side ([[Par]]).
+  * cache. It runs two concurrent chains that share no data ([[Par]]): the
+  * train chain runs its object JSON, caption JSON and shard sinks side by
+  * side, and the validation chain writes its JSON sinks, reads them back,
+  * encodes and writes its shards. The example counts come from the shard
+  * writers; there is no separate count job.
   */
 object Pipeline {
 
@@ -322,47 +328,58 @@ object Pipeline {
     * TFRecords are built from the annotation FILES read back
     * (images_to_tfrecord.py:280-285) — the sinks round-trip for real.
     *
-    * The augmented train set is encoded once into a cached
-    * [[EncodedExample]] set (one count fills it); both train JSON sinks
-    * and the train shards read that cache. The train sinks and the
-    * validation chain then run side by side. Both cached sets (the
-    * annotated frames and the encoded train set) are released on return. */
+    * The train chain and the validation chain start together. On the
+    * train side the augmented set is encoded once into a cached
+    * [[EncodedExample]] set, which the object JSON, caption JSON and shard
+    * sinks read side by side. The validation chain writes its JSON sinks,
+    * reads them back and encodes into a second cached set, since the shard
+    * writer reads its input twice and `skipped` must count each dropped
+    * box once. All three cached sets (the annotated frames and both
+    * encoded sets) are released on return. */
   def runEndToEnd(spark: SparkSession, images: Dataset[(String, Array[Short], Int, Int)],
       labels: DataFrame, outDir: String,
       trainShards: Int = 256, valShards: Int = 32): (Long, Long, Long) = {
+    import spark.implicits._
     val maps = createMaps(labels)
     val annotated = annotate(spark, images, maps).cache()
     val (train, valid) = hashSplit8020(annotated)
 
     val skipped = spark.sparkContext.longAccumulator("annotations_skipped")
-    val encodedTrain =
-      encodeExamples(ops.Augment.allPasses(train), sources.LabelMap.rsnaIndex, skipped).cache()
-
-    def writeJson(frames: (DataFrame, DataFrame), objDir: String, capDir: String): Unit = {
-      frames._1.coalesce(1).write.mode("overwrite").json(s"$outDir/$objDir")
-      frames._2.coalesce(1).write.mode("overwrite").json(s"$outDir/$capDir")
-    }
+    // Each chain caches its encoded set as an RDD: the first job that reads
+    // a partition fills it, so the sinks start at once and no block is
+    // computed twice. A cached Dataset would add a fill job of its own under
+    // adaptive execution, and a sink that planned alongside it would run a
+    // second fill job whose tasks only wait on the first one's blocks.
+    def encodeCached(ds: Dataset[ImageEx]): RDD[EncodedExample] =
+      encodeExamples(ds, sources.LabelMap.rsnaIndex, skipped).rdd
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    def json(frame: DataFrame, dir: String): Unit =
+      frame.coalesce(1).write.mode("overwrite").json(s"$outDir/$dir")
     try {
-      val nTrain = encodedTrain.count()
-      Par.par2 {
-        writeJson(annotationFrames(spark, encodedTrain), "object_annotation", "caption_annotation")
-        TFRecordSink.write(records(encodedTrain), s"$outDir/tfrecords", "train", trainShards)
+      val (nTrain, nVal) = Par.par2 {
+        val encoded = encodeCached(ops.Augment.allPasses(train))
+        try {
+          val encodedTrain = spark.createDataset(encoded)
+          val (objects, captions) = annotationFrames(spark, encodedTrain)
+          Par.par3(json(objects, "object_annotation"))(json(captions, "caption_annotation"))(
+            TFRecordSink.write(records(encodedTrain), s"$outDir/tfrecords", "train", trainShards))._3
+        } finally encoded.unpersist()
       } {
         // validation annotation sinks (generate_images_from_dicom.py:92-99)
-        writeJson(annotationFrames(spark, valid),
-          "validation_object_annotation", "validation_caption_annotation")
+        val (objects, captions) = annotationFrames(spark, valid)
+        Par.par2(json(objects, "validation_object_annotation"))(
+          json(captions, "validation_caption_annotation"))
         // stage 2 consumes the validation annotation FILES (S6), not the
         // in-memory rows — proving the JSON sinks round-trip
         val valFromFiles = readAnnotations(spark,
           s"$outDir/validation_object_annotation",
           s"$outDir/validation_caption_annotation", valid)
-        TFRecordSink.write(assembleExamples(valFromFiles, sources.LabelMap.rsnaIndex, skipped),
+        val encoded = encodeCached(valFromFiles)
+        try TFRecordSink.write(records(spark.createDataset(encoded)),
           s"$outDir/tfrecords", "val", valShards)
+        finally encoded.unpersist()
       }
-      (nTrain, valid.count(), skipped.value)
-    } finally {
-      encodedTrain.unpersist()
-      annotated.unpersist()
-    }
+      (nTrain, nVal, skipped.value)
+    } finally annotated.unpersist()
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException,
-  FileInputStream, FileOutputStream, IOException, InputStream}
+  FileInputStream, IOException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32C
 
@@ -48,57 +48,88 @@ object TFRecordIO {
 
   // ------------------------------------------------------- protobuf writing
 
-  private final class ProtoOut {
-    private val buf = new java.io.ByteArrayOutputStream()
-    def writeVarint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7FL) != 0) { buf.write(((v & 0x7F) | 0x80).toInt); v >>>= 7 }
-      buf.write(v.toInt)
-    }
-    def writeTag(field: Int, wireType: Int): Unit = writeVarint((field << 3) | wireType)
-    def writeLenDelim(field: Int, data: Array[Byte]): Unit = {
-      writeTag(field, 2); writeVarint(data.length); buf.write(data, 0, data.length)
-    }
-    def toBytes: Array[Byte] = buf.toByteArray
+  private def varintSize(v0: Long): Int = {
+    var v = v0
+    var n = 1
+    while ((v & ~0x7FL) != 0) { v >>>= 7; n += 1 }
+    n
   }
 
-  private def encodeFeature(f: Feature): Array[Byte] = {
-    val inner = new ProtoOut
-    f match {
-      case BytesFeature(vs) => vs.foreach(v => inner.writeLenDelim(1, v))
-      case FloatFeature(vs) =>
-        val bb = ByteBuffer.allocate(4 * vs.length).order(ByteOrder.LITTLE_ENDIAN)
-        vs.foreach(bb.putFloat)
-        inner.writeLenDelim(1, bb.array()) // packed
-      case Int64Feature(vs) =>
-        val tmp = new ProtoOut
-        vs.foreach(tmp.writeVarint)
-        inner.writeLenDelim(1, tmp.toBytes) // packed
+  /** Bytes of a length-delimited field with a `len`-byte payload; every tag
+    * written here fits one byte (field numbers 1-3). */
+  private def lenDelimSize(len: Int): Int = 1 + varintSize(len) + len
+
+  /** A protobuf writer over one array sized up front. */
+  private final class ProtoOut(size: Int) {
+    val buf = new Array[Byte](size)
+    var pos = 0
+    def writeVarint(v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7FL) != 0) { buf(pos) = ((v & 0x7F) | 0x80).toByte; pos += 1; v >>>= 7 }
+      buf(pos) = v.toByte
+      pos += 1
     }
-    val listBytes = inner.toBytes
-    val feat = new ProtoOut
-    val fieldNo = f match {
-      case _: BytesFeature => 1
-      case _: FloatFeature => 2
-      case _: Int64Feature => 3
+    /** Tag and length of a length-delimited field; the payload follows. */
+    def writeHeader(field: Int, len: Int): Unit = { writeVarint((field << 3) | 2); writeVarint(len) }
+    def writeBytes(b: Array[Byte]): Unit = {
+      System.arraycopy(b, 0, buf, pos, b.length)
+      pos += b.length
     }
-    feat.writeLenDelim(fieldNo, listBytes)
-    feat.toBytes
+    def writeFloatLE(f: Float): Unit = {
+      val v = java.lang.Float.floatToRawIntBits(f)
+      buf(pos) = v.toByte; buf(pos + 1) = (v >> 8).toByte
+      buf(pos + 2) = (v >> 16).toByte; buf(pos + 3) = (v >> 24).toByte
+      pos += 4
+    }
+  }
+
+  private def packedInt64Size(vs: Seq[Long]): Int = vs.iterator.map(varintSize).sum
+
+  /** Payload bytes of a feature's list message (BytesList/FloatList/Int64List);
+    * float and int64 lists are packed, and written even when empty. */
+  private def listSize(f: Feature): Int = f match {
+    case BytesFeature(vs) => vs.iterator.map(v => lenDelimSize(v.length)).sum
+    case FloatFeature(vs) => lenDelimSize(4 * vs.length)
+    case Int64Feature(vs) => lenDelimSize(packedInt64Size(vs))
+  }
+
+  /** A Feature message: its oneof field (1 bytes, 2 float, 3 int64) holding
+    * the list of `listLen` payload bytes. */
+  private def writeFeature(out: ProtoOut, f: Feature, listLen: Int): Unit = f match {
+    case BytesFeature(vs) =>
+      out.writeHeader(1, listLen)
+      vs.foreach { v => out.writeHeader(1, v.length); out.writeBytes(v) }
+    case FloatFeature(vs) =>
+      out.writeHeader(2, listLen)
+      out.writeHeader(1, 4 * vs.length)
+      vs.foreach(out.writeFloatLE)
+    case Int64Feature(vs) =>
+      out.writeHeader(3, listLen)
+      out.writeHeader(1, packedInt64Size(vs))
+      vs.foreach(out.writeVarint)
   }
 
   /** Serialize a feature map as a tf.train.Example. Features are written in
-    * key order so output bytes are deterministic. */
+    * key order so output bytes are deterministic. Every message length is
+    * computed first, so the record is filled into one array of its exact
+    * size with no intermediate copies. */
   def encodeExample(features: Map[String, Feature]): Array[Byte] = {
-    val featuresMsg = new ProtoOut
-    features.toSeq.sortBy(_._1).foreach { case (name, f) =>
-      val entry = new ProtoOut
-      entry.writeLenDelim(1, name.getBytes("UTF-8"))
-      entry.writeLenDelim(2, encodeFeature(f))
-      featuresMsg.writeLenDelim(1, entry.toBytes)
+    val sorted = features.toArray.sortBy(_._1)
+    val names = sorted.map(_._1.getBytes("UTF-8"))
+    val lists = sorted.map(f => listSize(f._2))
+    // map entry: key = 1 (the name), value = 2 (the Feature message)
+    val entries = sorted.indices.map(i => lenDelimSize(names(i).length) + lenDelimSize(lenDelimSize(lists(i))))
+    val featuresLen = entries.iterator.map(lenDelimSize).sum
+    val out = new ProtoOut(lenDelimSize(featuresLen))
+    out.writeHeader(1, featuresLen) // Example.features
+    sorted.indices.foreach { i =>
+      out.writeHeader(1, entries(i)) // Features.feature map entry
+      out.writeHeader(1, names(i).length)
+      out.writeBytes(names(i))
+      out.writeHeader(2, lenDelimSize(lists(i)))
+      writeFeature(out, sorted(i)._2, lists(i))
     }
-    val example = new ProtoOut
-    example.writeLenDelim(1, featuresMsg.toBytes)
-    example.toBytes
+    out.buf
   }
 
   // ------------------------------------------------------- protobuf reading
@@ -190,8 +221,9 @@ object TFRecordIO {
 
   // ----------------------------------------------------------- file framing
 
-  final class Writer(path: String) extends AutoCloseable {
-    private val out = new BufferedOutputStream(new FileOutputStream(path), 1 << 16)
+  /** Frames records onto a stream (buffered here; closed by [[close]]). */
+  final class Writer(stream: OutputStream) extends AutoCloseable {
+    private val out = new BufferedOutputStream(stream, 1 << 16)
     def write(record: Array[Byte]): Unit = {
       val lenBuf = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
         .putLong(record.length.toLong).array()

@@ -168,11 +168,35 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("end-to-end: releases its caches; no persistent RDD outlives the run") {
-    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.storage.StorageLevel
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
     val before = persisted
-    val out = java.nio.file.Files.createTempDirectory("graft_e2e_cache").toString
-    Pipeline.runEndToEnd(spark, fixtureImages, fixtureLabels, out,
-      trainShards = 4, valShards = 2)
+    // the cached RDDs the run's stages read: the annotated frames and the
+    // train and validation encoded sets
+    val cached = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val marker = "release-test-drained"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        s.stageInfo.rddInfos.filter(_.storageLevel != StorageLevel.NONE).foreach(r => cached.add(r.id))
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == marker)
+          drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = java.nio.file.Files.createTempDirectory("graft_e2e_cache").toString
+      Pipeline.runEndToEnd(spark, fixtureImages, fixtureLabels, out,
+        trainShards = 4, valShards = 2)
+      // listener events arrive in order: once the marker job is seen, every
+      // stage of the run has been
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(cached.size === 3, "annotated, encoded train and encoded validation sets")
     assert((persisted -- before).isEmpty)
   }
 

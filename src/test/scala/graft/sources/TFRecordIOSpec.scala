@@ -42,7 +42,7 @@ class TFRecordIOSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempFile("graft", ".tfrecord").toString
     val records = (0 until 100).map(i =>
       encodeExample(Map("id" -> Feature.int64(i.toLong), "p" -> Feature.str("x" * i))))
-    val w = new Writer(tmp)
+    val w = new Writer(new java.io.FileOutputStream(tmp))
     records.foreach(w.write)
     w.close()
     val back = readFile(tmp).toSeq
@@ -57,7 +57,7 @@ class TFRecordIOSpec extends AnyFunSuite {
 
   test("a file cut inside its last record fails the read instead of ending early") {
     val tmp = java.nio.file.Files.createTempFile("graft", ".tfrecord")
-    val w = new Writer(tmp.toString)
+    val w = new Writer(new java.io.FileOutputStream(tmp.toFile))
     (0 until 3).foreach(i => w.write(encodeExample(Map("id" -> Feature.int64(i.toLong)))))
     w.close()
     val raw = java.nio.file.Files.readAllBytes(tmp)
@@ -70,5 +70,43 @@ class TFRecordIOSpec extends AnyFunSuite {
     val a = encodeExample(Map("b" -> Feature.int64(1), "a" -> Feature.str("x")))
     val b = encodeExample(Map("a" -> Feature.str("x"), "b" -> Feature.int64(1)))
     assert(a.toSeq === b.toSeq)
+  }
+
+  test("encodeExample bytes match the golden sha256 of the benchmark's 16-feature example and of edge cases") {
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    // the benchmark's frame: seeded noise over a diagonal gradient, 512x512
+    val (w, h) = (512, 512)
+    val rng = new java.util.SplittableRandom(1L)
+    val px = Array.tabulate[Short](w * h) { i =>
+      val g = ((i % w) + (i / w)) * 255 / (w + h - 2)
+      math.max(0, math.min(255, g + rng.nextInt(-6, 7))).toShort
+    }
+    val png = graft.Pipeline.pngBytes(px, w, h)
+    assert(png.length === 161254)
+    import Feature._
+    val bench = Map(
+      "image/height" -> int64(h), "image/width" -> int64(w),
+      "image/filename" -> str("frame.png"), "image/source_id" -> str("frame"),
+      "image/key/sha256" -> str(sha(png)), "image/encoded" -> bytes(png),
+      "image/format" -> str("png"), "image/caption" -> strs(Seq("1")),
+      "image/object/bbox/xmin" -> floats(Seq(0.3f)), "image/object/bbox/xmax" -> floats(Seq(0.5f)),
+      "image/object/bbox/ymin" -> floats(Seq(0.3f)), "image/object/bbox/ymax" -> floats(Seq(0.5f)),
+      "image/object/class/text" -> strs(Seq("pneumonia")),
+      "image/object/class/label" -> int64s(Seq(1L)), "image/object/is_crowd" -> int64s(Seq(0L)),
+      "image/object/area" -> floats(Seq(40000f)))
+    // empty lists of each kind, multi-byte varints, negative int64s,
+    // non-ASCII names, NaN and subnormal floats, an empty bytes value
+    val edge = Map(
+      "a/empty-bytes" -> strs(Seq.empty), "b/empty-floats" -> floats(Seq.empty),
+      "c/empty-int64" -> int64s(Seq.empty),
+      "d/int64" -> int64s(Seq(0L, 127L, 128L, -1L, Long.MinValue, Long.MaxValue, 300L)),
+      "e/\u00fcn\u00efcode-key" -> strs(Seq("", "x" * 200, "\u00f1" * 70)),
+      "f/floats" -> floats(Seq(Float.NaN, -0f, Float.MaxValue, 1e-40f)),
+      "g/bytes" -> BytesFeature(Seq(Array.emptyByteArray, Array.fill[Byte](20000)(7))))
+    assert(sha(encodeExample(bench)) === "ad3ef6dbbf26af3d3831dfe93ac00350505a32d2e08ca275c30232c781ff38cd")
+    assert(sha(encodeExample(edge)) === "be743ce9603a0889bd4a8dd09a2b8066adb495f54d13c45b8caff2c24b8ac5fe")
+    assert(encodeExample(Map.empty).toSeq === Seq[Byte](0x0A, 0x00))
+    assert(decodeExample(encodeExample(edge))("d/int64") === edge("d/int64"))
   }
 }
