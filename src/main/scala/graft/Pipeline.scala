@@ -334,28 +334,34 @@ object Pipeline {
     * sinks read side by side. The validation chain writes its JSON sinks,
     * reads them back and encodes into a second cached set, since the shard
     * writer reads its input twice and `skipped` must count each dropped
-    * box once. All three cached sets (the annotated frames and both
-    * encoded sets) are released on return. */
+    * box once. The annotated frames are cached as an RDD too, so no job
+    * runs only to fill a cache. All three cached sets are released on
+    * return.
+    *
+    * Every sink publishes a complete set or leaves the old one: the JSON
+    * sinks replace their directories through
+    * [[sources.Publish.replaceDir]], and the shard sets publish through
+    * [[TFRecordSink.write]]. Both chains have finished, failed or not,
+    * before this returns or throws ([[Par]]). */
   def runEndToEnd(spark: SparkSession, images: Dataset[(String, Array[Short], Int, Int)],
       labels: DataFrame, outDir: String,
       trainShards: Int = 256, valShards: Int = 32): (Long, Long, Long) = {
     import spark.implicits._
     val maps = createMaps(labels)
-    val annotated = annotate(spark, images, maps).cache()
-    val (train, valid) = hashSplit8020(annotated)
-
+    // Every cache here is an RDD: the first job that reads a partition
+    // fills it, so the sinks start at once and no block is computed twice.
+    // Under adaptive execution a cached Dataset gets a fill job for every
+    // plan that scans it (one per augmentation pass and per sink), whose
+    // tasks only wait on the first one's blocks.
+    val annotated = annotate(spark, images, maps).rdd.persist(StorageLevel.MEMORY_AND_DISK)
     val skipped = spark.sparkContext.longAccumulator("annotations_skipped")
-    // Each chain caches its encoded set as an RDD: the first job that reads
-    // a partition fills it, so the sinks start at once and no block is
-    // computed twice. A cached Dataset would add a fill job of its own under
-    // adaptive execution, and a sink that planned alongside it would run a
-    // second fill job whose tasks only wait on the first one's blocks.
     def encodeCached(ds: Dataset[ImageEx]): RDD[EncodedExample] =
       encodeExamples(ds, sources.LabelMap.rsnaIndex, skipped).rdd
         .persist(StorageLevel.MEMORY_AND_DISK)
     def json(frame: DataFrame, dir: String): Unit =
-      frame.coalesce(1).write.mode("overwrite").json(s"$outDir/$dir")
+      sources.Publish.replaceDir(spark, s"$outDir/$dir")(frame.coalesce(1).write.json(_))
     try {
+      val (train, valid) = hashSplit8020(spark.createDataset(annotated))
       val (nTrain, nVal) = Par.par2 {
         val encoded = encodeCached(ops.Augment.allPasses(train))
         try {

@@ -62,37 +62,30 @@ final case class IvfPqIndex(
     if (laidOut != null) { laidOut.unpersist(blocking = false); laidOut = null }
   }
 
-  /** Persist all four tables under `dir` (overwrite). Returns this.
+  /** Persist all four tables under `dir`, replacing what is there as one
+    * unit ([[graft.sources.Publish.replaceDir]]): the tables are staged
+    * side by side and swapped in together, so a failed save leaves the
+    * previous index whole. Returns this.
     *
     * The four sinks are independent jobs (distinct directories, no data
     * dependency), and three of them are driver-built single-row-group
     * writes whose cost is pure job fixed overhead — so they run
-    * CONCURRENTLY (guide §2.6: actions are only sequential because the
-    * driver calls them sequentially). The small writes are submitted to a
-    * pool and the corpus-sized `codes` write keeps the caller thread; the
-    * scheduler back-fills the small jobs into the encode job's tail. The
-    * written bytes are identical to the sequential form — same frames,
-    * same paths, same mode. */
+    * CONCURRENTLY ([[graft.Par]]; guide §2.6: actions are only sequential
+    * because the driver calls them sequentially). The corpus-sized `codes`
+    * write keeps the caller thread; the scheduler back-fills the small
+    * jobs into the encode job's tail. */
   def save(dir: String): IvfPqIndex = {
     val spark = codes.sparkSession
     import spark.implicits._
-    val small = Seq(
-      centroids.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }
-        .toDF("cell", "vec") -> s"$dir/centroids",
-      codebook.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }
-        .toDF("c", "vec") -> s"$dir/codebook",
-      Seq(m).toDF("m") -> s"$dir/meta")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(small.size)
-    try {
-      val futs = small.map { case (df, path) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit =
-            df.coalesce(1).write.mode("overwrite").parquet(path)
-        })
-      }
-      codes.write.mode("overwrite").parquet(s"$dir/codes")
-      futs.foreach(_.get())
-    } finally pool.shutdown()
+    def vecs(vs: Array[Array[Double]], key: String) =
+      vs.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }.toDF(key, "vec")
+    graft.sources.Publish.replaceDir(spark, dir) { tmp =>
+      def small(df: DataFrame, table: String): Unit = df.coalesce(1).write.parquet(s"$tmp/$table")
+      graft.Par.par2 {
+        graft.Par.par3(small(vecs(centroids, "cell"), "centroids"))(
+          small(vecs(codebook, "c"), "codebook"))(small(Seq(m).toDF("m"), "meta"))
+      }(codes.write.parquet(s"$tmp/codes"))
+    }
     this
   }
 
@@ -179,9 +172,11 @@ object IvfPqIndex {
   /** The quantizers of a persisted index: (centroids, m, codebook). They
     * are k-sized driver collects — three independent tiny jobs, run
     * concurrently (guide §2.6) so a read pays one job round-trip of fixed
-    * overhead instead of three. `codes` is not read. */
+    * overhead instead of three. `codes` is not read. An interrupted
+    * [[save]] into `dir` is healed first. */
   private[graft] def readQuantizers(spark: SparkSession,
       dir: String): (Array[Array[Double]], Int, Array[Array[Double]]) = {
+    graft.sources.Publish.recover(spark, dir)
     def vecs(path: String, ord: String): Array[Array[Double]] =
       spark.read.parquet(path).select(col(ord), col("vec")).orderBy(ord)
         .collect().map(_.getSeq[Double](1).toArray)
@@ -195,7 +190,8 @@ object IvfPqIndex {
   }
 
   /** A handle over a persisted index whose codes are a lazy DataFrame over
-    * the parquet; nothing is laid out. */
+    * the parquet; nothing is laid out. [[readQuantizers]] heals `dir`
+    * before anything is read. */
   private def open(spark: SparkSession, dir: String): IvfPqIndex = {
     val (cents, m, cb) = readQuantizers(spark, dir)
     IvfPqIndex(spark.read.parquet(s"$dir/codes"), cents, cb, m)
@@ -302,19 +298,21 @@ object IvfPqIndex {
   // ---- versioned lifecycle: build → serve/ingest → health → re-train ----
   //
   // A retrain re-encodes the corpus, so it must not clobber the index a
-  // concurrent reader is serving from. Versions are immutable directories
-  // (v1, v2, ...) under one root; a CURRENT pointer file names the live
-  // one and is the ONLY thing a swap rewrites — written to a temp name
-  // and atomically renamed, so a reader sees either the old or the new
-  // index, never a half-written one (the _last_checkpoint /
-  // HDFS-edit-log pointer idiom). All pointer I/O goes through Hadoop's
-  // FileSystem/FileContext resolved from `root`'s scheme, so the root may
-  // be hdfs:// (FileContext rename with OVERWRITE is atomic there, as on
-  // a local posix FS) — the same discipline as PmiStream's state reads;
-  // java.io/java.nio here would silently report "no index" on any
-  // non-local root. On S3-class stores rename is copy+delete, so a real
-  // deployment there would publish via the store's conditional-put of
-  // this same tiny object.
+  // concurrent reader is serving from. Versions are directories (v1, v2,
+  // ...) under one root; a CURRENT pointer file names the live one and is
+  // written to a temp name and atomically renamed, so a reader sees either
+  // the old or the new index, never a half-written one (the
+  // _last_checkpoint / HDFS-edit-log pointer idiom). [[save]] itself
+  // replaces a directory whole, so `publish` no longer needs a fresh
+  // version directory to be safe; fresh versions keep an older handle's
+  // files in place while it still serves. All pointer I/O goes through
+  // Hadoop's FileSystem/FileContext resolved from `root`'s scheme, so the
+  // root may be hdfs:// (FileContext rename with OVERWRITE is atomic
+  // there, as on a local posix FS) — the same discipline as PmiStream's
+  // state reads; java.io/java.nio here would silently report "no index"
+  // on any non-local root. On S3-class stores rename is copy+delete, so a
+  // real deployment there would publish via the store's conditional-put
+  // of this same tiny object.
 
   private def hconf: org.apache.hadoop.conf.Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession

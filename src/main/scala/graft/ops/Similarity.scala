@@ -194,29 +194,20 @@ object Similarity {
     bucketedTopK(queries, corpus, idCol, embCol, k, e => seededBucket(e, planes))
   }
 
-  /** Embedding-cosine near-duplicate pairs (sim >= threshold), bucketed so
-    * only same-bucket pairs are scored. */
-  private def bucketedNearDups(df: DataFrame, idCol: String, embCol: String,
-      threshold: Double, bucketOf: Column => Column): DataFrame = {
+  /** Embedding-cosine near-duplicate pairs (sim >= threshold), bucketed
+    * by seed-vector planes so only same-bucket pairs are scored — the
+    * buckets are oracle-recomputable. */
+  def cosineNearDupsSeeded(df: DataFrame, idCol: String, embCol: String,
+      threshold: Double, seedIds: Seq[Long]): DataFrame = {
+    val planes = seedVectors(df, idCol, embCol, seedIds)
     val e = withNorm(df.select(col(idCol), col(embCol),
-      bucketOf(col(embCol)).as("bucket")), embCol, "__nrm")
+      seededBucket(col(embCol), planes).as("bucket")), embCol, "__nrm")
     e.as("a").join(e.as("b"),
         col("a.bucket") === col("b.bucket") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(
         col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
         cosineScore(s"a.$embCol", s"b.$embCol", "a.__nrm", "b.__nrm").as("sim"))
       .filter(col("sim") >= threshold)
-  }
-
-  def cosineNearDups(df: DataFrame, idCol: String, embCol: String,
-      threshold: Double, nBits: Int, dim: Int): DataFrame =
-    bucketedNearDups(df, idCol, embCol, threshold, e => lshBucket(e, nBits, dim))
-
-  /** Near-dup pairs with seed-vector planes — oracle-recomputable buckets. */
-  def cosineNearDupsSeeded(df: DataFrame, idCol: String, embCol: String,
-      threshold: Double, seedIds: Seq[Long]): DataFrame = {
-    val planes = seedVectors(df, idCol, embCol, seedIds)
-    bucketedNearDups(df, idCol, embCol, threshold, e => seededBucket(e, planes))
   }
 
   // ------------------------------------------------------------------- IVF

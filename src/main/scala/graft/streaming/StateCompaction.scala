@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Publish
+
 /** Shared state-compaction core for every batch_id-partitioned
   * foreachBatch stream (round-14 judge ask #1: round 13 bounded only
   * ConfSeqStream; VolumeStream/PmiStream/DriftStream/PostingsStream/
@@ -29,14 +31,16 @@ import org.apache.spark.sql.functions._
   * partition — including the folded immutable history — before
   * rewriting from driver-collected rows; a crash in that window lost the
   * entire state, unrecoverable because the source micro-batches are
-  * gone. Here the compacted state is written to a SIBLING temp
-  * directory (so the fold can run distributed — no driver collect — and
-  * reads never race the overwrite), then swapped in with a two-rename
-  * dance through a `.pre_compact` backup. Every crash point is
-  * recoverable: [[recover]] (run before every state read and at the top
-  * of every compaction) finds either an intact `stateDir`, or a missing
-  * `stateDir` with the backup present and renames it back. The data is
-  * never in fewer than one complete directory.
+  * gone. Here the compacted state is written through
+  * [[graft.sources.Publish.replaceDir]], the engine's one directory swap:
+  * the fold runs distributed into the sibling `<stateDir>.compact_tmp`
+  * (no driver collect; reads never race the write), which is then renamed
+  * in through a `<stateDir>.pre_compact` backup. Every crash point is
+  * recoverable: `Publish.recover` (run before every state read and write
+  * here) finds either an intact `stateDir`, or a missing `stateDir` with
+  * the backup present and renames it back. The data is never in fewer
+  * than one complete directory. What this object adds to the swap is the
+  * cross-process writer marker below.
   */
 object StateCompaction {
 
@@ -47,30 +51,6 @@ object StateCompaction {
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def backupPath(stateDir: String) = new Path(stateDir + ".pre_compact")
-  private def tmpPath(stateDir: String) = new Path(stateDir + ".compact_tmp")
-
-  /** Per-state-dir swap/recover serialization (round-14 ADVICE): recover()
-    * is destructive (it renames the backup back), so a reader polling in
-    * the window between a LIVE compaction's two renames used to see
-    * backup-present/target-missing and restore the backup out from under
-    * the writer — the writer's promote rename then landed inside the
-    * restored dir (HDFS semantics: duplicated rows) or failed with the
-    * backup already consumed (local FS: crashed query). Two concurrent
-    * pollers could likewise race each other's heal. Keyed on the
-    * FileSystem-qualified path so every spelling of the same dir maps to
-    * one monitor. The JVM-wide lock covers every IN-PROCESS consumer (the
-    * foreachBatch writer and pollers share the session JVM); the
-    * CROSS-PROCESS boundary is enforced separately by the writer marker
-    * below. */
-  private val swapLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(spark: SparkSession, stateDir: String): Object = {
-    val p = new Path(stateDir)
-    val key = fsOf(spark, p).makeQualified(p).toString
-    swapLocks.computeIfAbsent(key, _ => new Object)
-  }
 
   // ------------------------------------------- cross-process writer marker
 
@@ -144,34 +124,9 @@ object StateCompaction {
     ownedDirs.remove(fs.makeQualified(p).toString)
   }
 
-  /** Heal a crash inside the swap window: if the backup exists and the
-    * live dir is missing, the crash hit between the two renames — restore
-    * the backup; if both exist, the swap completed — drop the stale
-    * backup. Idempotent and cheap (one existence probe) when no crash
-    * happened. Serialized per state dir with [[compactIfNeeded]]'s swap,
-    * so a poll can never observe (and destructively "heal") the
-    * mid-rename state of a live compaction. */
-  def recover(spark: SparkSession, stateDir: String): Unit =
-    lockFor(spark, stateDir).synchronized(recoverLocked(spark, stateDir))
-
-  /** recover()'s body, for callers already holding the per-dir lock (the
-    * JVM monitor is reentrant, but keeping the lock-free body separate
-    * makes the locking discipline visible at each call site). */
-  private def recoverLocked(spark: SparkSession, stateDir: String): Unit = {
-    val target = new Path(stateDir)
-    val fs = fsOf(spark, target)
-    val backup = backupPath(stateDir)
-    if (fs.exists(backup)) {
-      if (!fs.exists(target)) {
-        if (!fs.rename(backup, target))
-          sys.error(s"state recovery failed: cannot restore $backup -> $target")
-      } else fs.delete(backup, true)
-    }
-  }
-
   /** Read the state directory after healing any interrupted swap — the
     * one entry point every report should use. The parquet LISTING runs
-    * inside the same per-dir lock as recover() (round-15 ADVICE): outside
+    * inside the swap's per-dir lock (round-15 ADVICE): outside
     * it, an in-process poller could list between a live compaction's two
     * renames — after its own recover() found nothing to heal — and fail
     * on the transiently missing dir. spark.read.parquet resolves schema
@@ -181,10 +136,7 @@ object StateCompaction {
     * compaction would have to open later — retried below as defense in
     * depth for that (rare, in-process) re-listing case. */
   def read(spark: SparkSession, stateDir: String): DataFrame = {
-    def attempt(): DataFrame = lockFor(spark, stateDir).synchronized {
-      recoverLocked(spark, stateDir)
-      spark.read.parquet(stateDir)
-    }
+    def attempt(): DataFrame = Publish.healed(spark, stateDir)(spark.read.parquet(stateDir))
     try attempt()
     catch { case scala.util.control.NonFatal(_) => attempt() }
   }
@@ -202,7 +154,7 @@ object StateCompaction {
   def writeBatchPartition(df: DataFrame, stateDir: String,
       batchId: Long): Unit = {
     ensureWriter(df.sparkSession, stateDir)
-    recover(df.sparkSession, stateDir)
+    Publish.recover(df.sparkSession, stateDir)
     df.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -213,7 +165,7 @@ object StateCompaction {
     * file. Resolved through the session's Hadoop FileSystem, not
     * java.io.File, so HDFS/S3 state dirs probe correctly at scale. */
   def hasState(spark: SparkSession, stateDir: String): Boolean = {
-    recover(spark, stateDir)
+    Publish.recover(spark, stateDir)
     val p = new Path(stateDir)
     val fs = fsOf(spark, p)
     fs.exists(p) && {
@@ -237,7 +189,7 @@ object StateCompaction {
       currentBatchId: Long, compactAfter: Int)
       (fold: DataFrame => DataFrame): Unit = {
     ensureWriter(spark, stateDir)
-    recover(spark, stateDir)
+    Publish.recover(spark, stateDir)
     val st = spark.read.parquet(stateDir)
     val nParts = st.select("batch_id").distinct().count()
     if (nParts > compactAfter) {
@@ -248,25 +200,11 @@ object StateCompaction {
         .select((dataCols :+ col("batch_id")): _*)
       val keep = st.filter(col("batch_id") === currentBatchId)
         .select((dataCols :+ col("batch_id")): _*)
-      val target = new Path(stateDir)
-      val fs = fsOf(spark, target)
-      val tmp = tmpPath(stateDir)
-      fs.delete(tmp, true)
-      // the distributed fold runs OUTSIDE the lock (it can take seconds
-      // and only touches the reader-invisible tmp dir); only the rename
-      // dance below must exclude concurrent recover() calls
-      folded.unionByName(keep)
-        .write.mode("overwrite").partitionBy("batch_id").parquet(tmp.toString)
-      lockFor(spark, stateDir).synchronized {
-        val backup = backupPath(stateDir)
-        fs.delete(backup, true)
-        if (!fs.rename(target, backup))
-          sys.error(s"compaction swap failed: cannot move $target aside")
-        if (!fs.rename(tmp, target)) {
-          fs.rename(backup, target)
-          sys.error(s"compaction swap failed: cannot promote $tmp; state restored")
-        }
-        fs.delete(backup, true)
+      // the distributed fold runs outside the lock (it can take seconds and
+      // only touches the reader-invisible staging dir); only the swap's
+      // renames exclude concurrent reads
+      Publish.replaceDir(spark, stateDir) { tmp =>
+        folded.unionByName(keep).write.partitionBy("batch_id").parquet(tmp)
       }
     }
   }

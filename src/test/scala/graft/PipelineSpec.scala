@@ -167,6 +167,53 @@ class PipelineSpec extends SparkSpec {
     assert(resA._3 === dropped)
   }
 
+  test("end-to-end: a failed run leaves the output of every sink that failed byte-identical") {
+    val out = java.nio.file.Files.createTempDirectory("graft_e2e_fail").toString
+    def run(images: org.apache.spark.sql.Dataset[(String, Array[Short], Int, Int)],
+        labels: org.apache.spark.sql.DataFrame) =
+      Pipeline.runEndToEnd(spark, images, labels, out, trainShards = 4, valShards = 2)
+    // every file under out, by relative path, with its sha256
+    def snapshot(): Map[String, String] = {
+      val root = java.nio.file.Paths.get(out)
+      val files = java.nio.file.Files.walk(root)
+      try files.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq.map { f =>
+        val p = f.asInstanceOf[java.nio.file.Path]
+        root.relativize(p).toString -> java.util.HexFormat.of().formatHex(
+          java.security.MessageDigest.getInstance("SHA-256")
+            .digest(java.nio.file.Files.readAllBytes(p)))
+      }.toMap finally files.close()
+    }
+    def under(snap: Map[String, String], dir: String) = snap.filter(_._1.startsWith(dir + "/"))
+    val published = Set("object_annotation", "caption_annotation",
+      "validation_object_annotation", "validation_caption_annotation", "tfrecords")
+    run(fixtureImages, fixtureLabels)
+    val first = snapshot()
+    // only the published sets: no staging or backup directory is left
+    assert(new java.io.File(out).list().toSet === published)
+    assert(under(first, "tfrecords").size === 6)
+
+    // a label row that fails createMaps's check: every sink fails
+    val badLabels = fixtureLabels.union(
+      Seq(("p004", Some(1.0), Some(1.0), Some(2.0), Some(2.0), 2)).toDF())
+    intercept[Exception](run(fixtureImages, badLabels))
+    assert(snapshot() === first, "a run with a bad label changed the previous outputs")
+
+    // frames whose pixels do not fill their size fail augmentation and
+    // encoding inside the sink jobs: the train JSON sinks and both shard
+    // sets keep their old files, while the validation JSON sinks, which
+    // never read pixels, complete and publish the same rows again
+    val badFrames = fixtureImages.map(r => (r._1, r._2.dropRight(1), r._3, r._4))
+    intercept[Exception](run(badFrames, fixtureLabels))
+    val after = snapshot()
+    assert(new java.io.File(out).list().toSet === published)
+    Seq("object_annotation", "caption_annotation", "tfrecords").foreach { d =>
+      assert(under(after, d) === under(first, d), s"a run with bad frames changed $d")
+    }
+    Seq("validation_object_annotation", "validation_caption_annotation").foreach { d =>
+      assert(under(after, d).values.toSeq.sorted === under(first, d).values.toSeq.sorted, d)
+    }
+  }
+
   test("end-to-end: releases its caches; no persistent RDD outlives the run") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
     import org.apache.spark.storage.StorageLevel
@@ -178,12 +225,19 @@ class PipelineSpec extends SparkSpec {
     val cached = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val marker = "release-test-drained"
     val drained = new java.util.concurrent.CountDownLatch(1)
+    // jobs whose stage computes nothing but a cached set: under adaptive
+    // execution, each plan that scans a cached Dataset starts one of these
+    val fillJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
         s.stageInfo.rddInfos.filter(_.storageLevel != StorageLevel.NONE).foreach(r => cached.add(r.id))
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        // a stage's first RDD info is the stage's own RDD
+        if (j.stageInfos.exists(_.rddInfos.head.storageLevel != StorageLevel.NONE))
+          fillJobs.add(j.jobId)
         if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == marker)
           drained.countDown()
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -197,6 +251,8 @@ class PipelineSpec extends SparkSpec {
       assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
     } finally sc.removeSparkListener(listener)
     assert(cached.size === 3, "annotated, encoded train and encoded validation sets")
+    // each cached set is filled by the first job that reads it
+    assert(fillJobs.isEmpty, s"jobs that only fill a cache: $fillJobs")
     assert((persisted -- before).isEmpty)
   }
 

@@ -206,6 +206,57 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("qid", "rn").collect().toSeq === freshRefined)
   }
 
+  /** The topK rows a fresh load of `dir` serves for `q`. */
+  private def served(dir: String, q: org.apache.spark.sql.DataFrame) = {
+    val idx = IvfPqIndex.load(spark, dir)
+    try idx.topK(q, "vec_id", "embedding", k = 10, nProbe = 3).orderBy("qid", "rn").collect().toSeq
+    finally idx.release()
+  }
+
+  private def siblings(dir: String) =
+    Seq(".compact_tmp", ".pre_compact").filter(s => new java.io.File(dir + s).exists)
+
+  test("IvfPqIndex.save: a save that fails part-way leaves the previous index serving") {
+    val e = graft.Tables.embeddings(spark, sfDir)
+    val q = e.filter($"vec_id" < 5)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_resave").toString
+    IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))).save(dir)
+    assert(siblings(dir).isEmpty)
+    val before = served(dir, q)
+    // other quantizers, and a codes table that fails on one row: a partial
+    // publish would put the new small tables beside the old codes
+    val other = IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (8L to 15L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (16L to 31L)))
+    val failing = other.copy(codes = other.codes.withColumn("cid",
+      when($"cid" === 3L, raise_error(lit("codes row 3 fails"))).otherwise($"cid")))
+    val err = intercept[Exception](failing.save(dir))
+    assert(messages(err).contains("codes row 3 fails"), messages(err))
+    assert(siblings(dir).isEmpty, "a failed save leaves no staging directory")
+    assert(served(dir, q) === before)
+  }
+
+  test("IvfPqIndex.load heals a directory left between the swap's two renames") {
+    val e = graft.Tables.embeddings(spark, sfDir)
+    val q = e.filter($"vec_id" < 5)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_crash").toString
+    IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))).save(dir)
+    val before = served(dir, q)
+    // as a kill leaves it after the backup rename: the old index moved to
+    // the backup, and a complete, different index staged beside it
+    IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (8L to 15L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (16L to 31L))).save(dir + ".compact_tmp")
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".pre_compact")))
+    assert(served(dir, q) === before, "load must restore the backup, not promote the staged index")
+    assert(siblings(dir) === Seq(".compact_tmp"))
+    // the next save discards the stale staging directory
+    IvfPqIndex.build(e, "vec_id", "embedding", seedIds = (0L to 7L), m = 8,
+      Similarity.seedCentroids(e, "vec_id", "embedding", (0L to 15L))).save(dir)
+    assert(siblings(dir).isEmpty)
+    assert(served(dir, q) === before)
+  }
+
   test("brute-force and index top-k cuts plan a per-partition k-heap (Partial WindowGroupLimit)") {
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
